@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from datalake_project_spark.functions.text import shingles, tokens
+from datalake_project_spark.tuning import fan_out_scan
 
 MERSENNE31 = 2_147_483_647  # field for minhash arithmetic
 
@@ -37,15 +38,6 @@ def dedup_exact(df: DataFrame, keys: list[str], order_by: list[Column] | None = 
             .where(F.col("_rn") == 1).drop("_rn"))
 
 
-def _scan_fan_out(docs: DataFrame) -> int | None:
-    """Width to spread a CPU-heavy per-row pass when the source scan
-    has fewer splits than the cluster has cores — see
-    ``tuning.scan_fan_out_width`` (guide §2.5 input skew; None at
-    production scan widths, so no extra exchange is ever introduced)."""
-    from datalake_project_spark.tuning import scan_fan_out_width
-    return scan_fan_out_width(docs)
-
-
 def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(_id, _shingles) for every document — including empty arrays for
     docs shorter than ``n`` tokens (r12 contract change: the old
@@ -54,14 +46,12 @@ def _doc_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
     evaluated the tokenizer twice; empty arrays vanish at the explode
     every consumer performs, and consumers that count documents count
     distinct ids on the exploded index instead)."""
-    base = docs.select(F.col(id_col).alias("_id"),
-                       F.col(text_col).alias("_text"))
-    w = _scan_fan_out(docs)
-    if w is not None:
-        # spread the tokenize+shingle pass across the cluster BEFORE the
-        # expensive expressions run (projection stays above the exchange;
-        # the id hash is deterministic, so retries are safe)
-        base = base.repartition(w, "_id")
+    # spread the tokenize+shingle pass across the cluster BEFORE the
+    # expensive expressions run when the scan undershoots the cores
+    # (projection stays above the exchange; the id hash is
+    # deterministic, so retries are safe)
+    base = fan_out_scan(docs.select(F.col(id_col).alias("_id"),
+                                    F.col(text_col).alias("_text")), "_id")
     sh = shingles(tokens(F.col("_text")), n=n)
     return base.select("_id", sh.alias("_shingles"))
 
@@ -112,7 +102,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     ``num_partitions`` sizes the self-join / pair-count exchanges
     (callers derive it from the corpus footprint via
-    ``tuning.suggest_for_stage``): the sum-df² pair stream's aggregate
+    ``tuning.width``): the sum-df² pair stream's aggregate
     hash tables otherwise sit on the session's static shuffle width
     and spill once the corpus outgrows it (q_dedup_bcubed measured
     2.6 GB spilled at the r6 ladder's 10x point on 32 partitions).
@@ -202,13 +192,10 @@ def winnow_fingerprint_rows(docs: DataFrame, id_col: str = "doc_id",
         char_fold_hash, span_list, tokens,
     )
 
-    base = docs.select(F.col(id_col).alias("_id"),
-                       F.col(text_col).alias("_text"))
-    fan = _scan_fan_out(docs)
-    if fan is not None:
-        # single-split fixture scan: spread the span+hash pass (r12
-        # profile: a 2.8 s single-task stage; see _scan_fan_out)
-        base = base.repartition(fan, "_id")
+    # single-split fixture scan: spread the span+hash pass (r12
+    # profile: a 2.8 s single-task stage; see tuning.fan_out_scan)
+    base = fan_out_scan(docs.select(F.col(id_col).alias("_id"),
+                                    F.col(text_col).alias("_text")), "_id")
     spans = base.select(
         "_id",
         F.posexplode(span_list(tokens(F.col("_text")), k))
@@ -423,13 +410,10 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     # distinct tokens, hash each once, and take the 64 per-bit sums as
     # groupBy aggregates (one shuffle, map-side partials, small codegen
     # expressions) instead of 64 array folds per row.
-    base = docs.select(F.col(id_col).alias("_id"),
-                       F.col(text_col).alias("_text"))
-    w = _scan_fan_out(docs)
-    if w is not None:
-        # single-split fixture scan: spread the tokenize pass (see
-        # _scan_fan_out — a no-op at production scan widths)
-        base = base.repartition(w, "_id")
+    # single-split fixture scan: spread the tokenize pass (see
+    # tuning.fan_out_scan — a no-op at production scan widths)
+    base = fan_out_scan(docs.select(F.col(id_col).alias("_id"),
+                                    F.col(text_col).alias("_text")), "_id")
     inv = (base.select("_id",
                        F.explode(F.array_distinct(tokens(F.col("_text"))))
                        .alias("_t"))

@@ -367,7 +367,7 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
     doc="Footprint-derived shuffle sizing applied end-to-end: the join's "
-        "partition count comes from tuning.suggest_shuffle_partitions "
+        "partition count comes from tuning.width "
         "over the ACTUAL on-disk bytes of both inputs (dir_bytes), "
         "applied per-stage via repartition(n, key) — no session-conf "
         "mutation, so concurrent queries keep their own sizing. At "
@@ -379,13 +379,11 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate from the raw tables — sizing changes no values.",
 )
 def q_tuned_shuffle_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.tuning import dir_bytes, suggest_shuffle_partitions
+    from datalake_project_spark.tuning import dir_bytes, width
 
     li_path = f"{sf_dir.rstrip('/')}/lineitem.parquet"
     o_path = f"{sf_dir.rstrip('/')}/orders.parquet"
-    n = suggest_shuffle_partitions(
-        dir_bytes(li_path) + dir_bytes(o_path),
-        cluster_cores=spark.sparkContext.defaultParallelism)
+    n = width(spark, "jvm_shuffle", dir_bytes(li_path) + dir_bytes(o_path))
     cat = Catalog(spark, sf_dir)
     li = cat.table("lineitem").repartition(n, "l_orderkey")
     o = cat.table("orders")

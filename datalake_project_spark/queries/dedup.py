@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from datalake_project_spark import tuning
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.operators import dedup as D
 from datalake_project_spark.queries import local_df, register
@@ -38,14 +39,10 @@ _PAIRS_ORACLE = """
 
 
 
-def _pair_parts(spark, sf_dir: str) -> int:
-    """Footprint-derived exchange width for the shingle pair stream —
-    shared by every ngram_jaccard_pairs call site (the 30x ladder
-    measured 3.8 GB spill in the unsized truth arms; the sum-df²
-    working set runs ~45x the documents parquet bytes)."""
-    from datalake_project_spark.tuning import suggest_for_stage
-    return suggest_for_stage(spark, f"{sf_dir}/documents.parquet",
-                             expansion=48.0)
+# Every shingle-pair exchange is sized from the documents footprint: the
+# sum-df² pair stream's working set runs ~45x the parquet bytes (the 30x
+# ladder measured 3.8 GB spill in the unsized truth arms).
+_PAIR_EXPANSION = 48
 
 
 @register(
@@ -100,8 +97,9 @@ def q_dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    return D.ngram_jaccard_pairs(d, threshold=0.5,
-                                 num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    return D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
 
 
 @register(
@@ -267,8 +265,9 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
     return D.connected_components(pairs)
 
 
@@ -312,8 +311,9 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
     comp = D.connected_components(pairs)
     sizes = comp.groupBy("rep").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (sizes.groupBy("cluster_size")
@@ -334,8 +334,10 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
     return D.ngram_jaccard_pairs(d, threshold=0.5, max_df=50,
-                                 num_partitions=_pair_parts(spark, sf_dir))
+                                 num_partitions=n_parts)
 
 
 @register(
@@ -428,8 +430,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
     comp = D.connected_components(pairs)
     non_reps = comp.where(F.col("id") != F.col("rep")).select("id")
     return d.join(non_reps, d.doc_id == non_reps.id, "left_anti").select("doc_id")
@@ -546,8 +549,9 @@ def q_dedup_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
     comp = D.connected_components(pairs)
     dropped = comp.where(F.col("id") != F.col("rep")).select("id")
     tagged = d.select("doc_id", "source").join(
@@ -656,8 +660,9 @@ def q_dedup_dfcap_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
     cuts = F.array(*[F.lit(t) for t in (0.5, 0.6, 0.7, 0.8, 0.9)])
     exploded = pairs.select("jaccard",
                             F.explode(cuts).alias("threshold"))
@@ -715,8 +720,9 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_review_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = (D.ngram_jaccard_pairs(d, threshold=0.5,
-                                   num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = (D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
              .orderBy(F.desc("jaccard"), "a_id", "b_id").limit(10)
              .localCheckpoint(eager=False))
     da = d.select(F.col("doc_id").alias("a_id"),
@@ -854,8 +860,9 @@ def q_dedup_savings_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges — the r8 attribution found the UNSIZED call here was the
     # query's entire 610 MB 30x spill: one 33.8M-row pair-count
     # HashAggregate on AQE-coalesced session width)
-    pairs = D.ngram_jaccard_pairs(d1, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d1, threshold=0.5, num_partitions=n_parts)
     comp = D.connected_components(pairs)
     non_reps = comp.where(F.col("id") != F.col("rep")).select("id")
     s2 = s1.join(non_reps, s1.doc_id == non_reps.id, "left_anti")
@@ -864,8 +871,7 @@ def q_dedup_savings_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 3: cross-document repeated-span coverage on what remains
     # (r12: fan out the single-split scan before the span pass — the
     # broadcast semi-joins above preserve the scan's 1-partition shape)
-    from datalake_project_spark.tuning import fan_out_scan
-    sp = fan_out_scan(d2, "doc_id").select("doc_id", F.posexplode(
+    sp = tuning.fan_out_scan(d2, "doc_id").select("doc_id", F.posexplode(
         T.span_list(T.tokens("text"), 8)).alias("pos", "span"))
     h = sp.withColumn("h", F.xxhash64("span")).localCheckpoint(eager=False)
     surv = (h.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
@@ -965,8 +971,9 @@ def q_dedup_resolved_by_quality(spark: SparkSession,
     from datalake_project_spark.functions.text import tokens
 
     d = Catalog(spark, sf_dir).table("documents")
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
     comp = D.connected_components(pairs)
     ws = tokens(F.col("text"))
     scored = d.select(
@@ -1058,8 +1065,9 @@ def q_dedup_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     # footprint-sized pair exchanges (r6 ladder: 2.6 GB spill at 10x
     # on the static session width)
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5,
-                                  num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
     rep = D.connected_components(pairs)  # (id, rep)
     lab = (d.join(rep.withColumnRenamed("id", "doc_id"), "doc_id", "left")
            .select("doc_id",
@@ -1180,15 +1188,15 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window, prefix self-join, truth arm) takes the footprint width:
     # the 30x ladder measured 7.3 GB spilled with these on the static
     # session setting. r9: the width uses an 8 MB per-partition target
-    # (vs _pair_parts' 128 MB default) because the pair stage pipelines
+    # (vs the 128 MB default) because the pair stage pipelines
     # the self-join SMJ sort WITH the pair-distinct aggregate in one
     # task's memory slice — the same co-resident-consumer sizing the
     # FS verify arm needed; the r8 receipt measured ~5 MB/task of sort
     # spill at the 64-task width that this deletes.
-    from datalake_project_spark.tuning import suggest_for_stage
-    nparts = suggest_for_stage(spark, f"{sf_dir}/documents.parquet",
-                               expansion=48.0,
-                               target_partition_bytes=8 << 20)
+    nparts = tuning.width(
+        spark, "jvm_shuffle",
+        _PAIR_EXPANSION * tuning.dir_bytes(f"{sf_dir}/documents.parquet"),
+        target_bytes=8 << 20)
     sh = D._doc_shingles(d, "doc_id", "text", 3)
     # sz rides the index rows from the source (_shingles is DISTINCT by
     # construction, so |shingle set| = size of the array = COUNT(*) per
@@ -1343,8 +1351,9 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     K, P = 16, 2147483647
     d = Catalog(spark, sf_dir).table("documents")
-    truth = (D.ngram_jaccard_pairs(
-        d, threshold=0.2, num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    truth = (D.ngram_jaccard_pairs(d, threshold=0.2, num_partitions=n_parts)
              .select("a_id", "b_id", "jaccard")
              .localCheckpoint(eager=False))
     ids = (truth.select(F.col("a_id").alias("_id"))
@@ -1466,8 +1475,9 @@ def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     B, P = 16, 2147483647
     d = Catalog(spark, sf_dir).table("documents")
-    truth = (D.ngram_jaccard_pairs(d, threshold=0.5,
-                                   num_partitions=_pair_parts(spark, sf_dir))
+    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
+                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
+    truth = (D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
              .select("a_id", "b_id", "jaccard")
              .localCheckpoint(eager=False))
     ids = (truth.select(F.col("a_id").alias("_id"))
@@ -1581,14 +1591,16 @@ def q_dedup_idf_weighted_jaccard(spark: SparkSession,
     # the 60x attribution put 1.3 GB of disk spill in the two SMJ
     # sorts that joined the 67.8 M-row pair table to the per-doc
     # weight table (tools/spill_attr.py). Exchanges are footprint-
-    # sized at the kcore-style 16 MB per-partition target (the default
-    # 128 MB target leaves the width at the 2x-cores floor).
+    # sized at the kcore-style 16 MB per-partition target: the byte term
+    # overtakes the density-capped cores floor once the pair working set
+    # passes 16 MB x cores rather than 128 MB x cores (at sf0.1 both
+    # targets give the 8-partition minimum).
     from pyspark.sql.window import Window
 
-    from datalake_project_spark.tuning import suggest_for_stage
-    n_parts = suggest_for_stage(
-        spark, f"{sf_dir}/documents.parquet", expansion=48.0,
-        target_partition_bytes=16 * 1024 * 1024)
+    n_parts = tuning.width(
+        spark, "jvm_shuffle",
+        _PAIR_EXPANSION * tuning.dir_bytes(f"{sf_dir}/documents.parquet"),
+        target_bytes=16 << 20)
     wv2 = wv.withColumn("_w", F.sum("_idf").over(
         Window.partitionBy("_id")))
     wvs = wv2.repartition(n_parts, "_s")
@@ -1664,12 +1676,12 @@ def q_dedup_idf_weighted_jaccard(spark: SparkSession,
 )
 def q_dedup_bag_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.functions.text import span_list, tokens
-    from datalake_project_spark.tuning import fan_out_scan
 
     # r13: the tokenize+shingle+hash pass ran in a 1-task stage (1.2 s
     # of the 4.8 s warm wall — single-split fixture scan, guide §2.5);
     # the fan-out is a no-op at production scan widths
-    d = fan_out_scan(Catalog(spark, sf_dir).table("documents"), "doc_id")
+    d = tuning.fan_out_scan(Catalog(spark, sf_dir).table("documents"),
+                            "doc_id")
     tf = (d.select("doc_id",
                    F.explode(span_list(tokens("text"), 3)).alias("s"))
           .select("doc_id", F.xxhash64("s").alias("s"))
@@ -1684,14 +1696,16 @@ def q_dedup_bag_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with any_value() and needs NO post-aggregate join — the idf twin
     # measured 1.3 GB of 60x spill in exactly those SMJ sorts before
     # this shape. Exchanges footprint-sized at a 16 MB per-partition
-    # target (128 MB leaves the width at the 2x-cores floor, where the
-    # pair partial-aggregate hash tables spilled 1.2 GB).
+    # target: the pair partial-aggregate hash tables spilled 1.2 GB at
+    # the narrower 128 MB-target width. The byte term overtakes the
+    # density-capped cores floor once the pair working set passes
+    # 16 MB x cores (at sf0.1 both targets give the 8-partition minimum).
     from pyspark.sql.window import Window
 
-    from datalake_project_spark.tuning import suggest_for_stage
-    n_parts = suggest_for_stage(
-        spark, f"{sf_dir}/documents.parquet", expansion=48.0,
-        target_partition_bytes=16 * 1024 * 1024)
+    n_parts = tuning.width(
+        spark, "jvm_shuffle",
+        _PAIR_EXPANSION * tuning.dir_bytes(f"{sf_dir}/documents.parquet"),
+        target_bytes=16 << 20)
     tfk2 = tfk.withColumn("dl", F.sum("tf").over(
         Window.partitionBy("doc_id")))
     tfs = tfk2.repartition(n_parts, "s")

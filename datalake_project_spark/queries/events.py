@@ -615,7 +615,7 @@ def _zscore_group(pdf):
         "constant-valued groups z-score to 0.",
 )
 def q_group_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.tuning import python_stage_width
+    from datalake_project_spark.tuning import dir_bytes, width
 
     e = Catalog(spark, sf_dir).table("events").select(
         "event_id", "user_id", "value")
@@ -623,8 +623,8 @@ def q_group_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalescing squeezed this KB-scale shuffle to ONE post-shuffle
     # partition, serializing every group's Python call in a single
     # task (r13 profile: 3.9 s wall, 0.2 s JVM cpu) — see
-    # tuning.python_stage_width
-    w = python_stage_width(spark, f"{sf_dir}/events.parquet")
+    # tuning.width's python_stage kind
+    w = width(spark, "python_stage", dir_bytes(f"{sf_dir}/events.parquet"))
     return e.repartition(w, "user_id").groupBy("user_id").applyInPandas(
         _zscore_group, schema=_ZSCORE_SCHEMA)
 

@@ -656,17 +656,16 @@ def q_graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "round is two shuffles regardless of graph size.",
 )
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.tuning import suggest_for_stage
+    from datalake_project_spark.tuning import dir_bytes, width
 
     K = 3
     li = Catalog(spark, sf_dir).table("lineitem")
+    li_bytes = dir_bytes(f"{sf_dir}/lineitem.parquet")
     # bip's distinct is sized too: at session width the dedup hash table
     # of 36M (s, p) pairs at the 60x rung spilled 92 MiB x 6 tasks (the
     # r10 attribution); the keyed repartition gives the aggregate the
     # same footprint-scaled width as every other exchange in the query.
-    from datalake_project_spark.tuning import suggest_for_stage as _sfs
-    nparts_bip = _sfs(spark, f"{sf_dir}/lineitem.parquet",
-                      target_partition_bytes=8 << 20)
+    nparts_bip = width(spark, "jvm_shuffle", li_bytes, target_bytes=8 << 20)
     bip = (li.select(F.col("l_suppkey").alias("s"),
                      F.col("l_partkey").alias("p"))
            .repartition(nparts_bip, "s", "p").distinct()
@@ -678,7 +677,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly that stage spilling 40 MiB x 32 tasks (1.28 GB) at the
     # 30x rung while every aggregate stayed clean. An 8 MB on-disk
     # target keeps each sorted slice a few MB in unsafe-row form at
-    # any scale; the floor keeps small fixtures at 2x cores.
+    # any scale; below ~8 MB x cores of lineitem the density-capped
+    # cores floor binds instead (8 at sf0.1 at both 4 and 32 cores).
     # 4 MB target, not 8: this width is ALSO the wedge stage's task
     # count, i.e. the MAP side of the big dedup exchange — each map
     # task's shuffle writer buffers its whole wedge slice, and 8 MB
@@ -688,8 +688,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~2.5M wedge rows per map task — under the cliff at every rung —
     # without doubling the task count the way 2 MB slices did (which
     # cost ~30% wall at 30x in scheduling overhead).
-    nparts_p = suggest_for_stage(spark, f"{sf_dir}/lineitem.parquet",
-                                 target_partition_bytes=4 << 20)
+    nparts_p = width(spark, "jvm_shuffle", li_bytes, target_bytes=4 << 20)
     a = bip.select(F.col("s").alias("u"), "p").repartition(nparts_p, "p")
     b = bip.select(F.col("s").alias("v"), "p").repartition(nparts_p, "p")
     # Wedge join emits each undirected edge ONCE (u < v) and mirrors
@@ -704,8 +703,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # static partitions), so the keyed repartition grows the hash-
     # aggregate width with the input and each task's slice stays
     # ~128 MB at any scale.
-    nparts = suggest_for_stage(spark, f"{sf_dir}/lineitem.parquet",
-                               expansion=64.0)
+    nparts = width(spark, "jvm_shuffle", 64 * li_bytes)
     # Dedup = one keyed repartition at the footprint width, then the
     # aggregate runs partial+final fused on those partitions. Measured
     # against both alternatives at the 30x ladder point: the r6 plain

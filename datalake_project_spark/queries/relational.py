@@ -20,10 +20,6 @@ from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return Catalog(spark, sf_dir).table(name)
-
-
 # --------------------------------------------------------------------------
 # Aggregation family (SURVEY §2.6)
 # --------------------------------------------------------------------------
@@ -48,7 +44,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         "means the shuffle carries one row per (flag,status) per partition.",
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = Catalog(spark, sf_dir).table("lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -80,7 +76,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the Parquet reader (PushedFilters), no shuffle beyond final agg.",
 )
 def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = Catalog(spark, sf_dir).table("lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -107,7 +103,7 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="groupBy + HAVING (post-aggregation filter).",
 )
 def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = Catalog(spark, sf_dir).table("customer")
     return (
         c.groupBy("c_nationkey")
         .agg(
@@ -132,7 +128,7 @@ def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Hierarchical grouping sets (rollup); Catalyst expands to Expand+Agg.",
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     return o.rollup("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),
@@ -152,7 +148,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-status, and grand total in one Expand+Agg pass over the scan.",
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     return (
         o.groupingSets([["o_orderpriority"], ["o_orderstatus"], []],
                        "o_orderpriority", "o_orderstatus")
@@ -171,7 +167,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Full grouping-set cube.",
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -187,7 +183,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="COUNT DISTINCT (two-phase shuffle: dedup then count).",
 )
 def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     return o.groupBy("o_orderstatus").agg(
         F.countDistinct("o_custkey").alias("n_custs"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -219,9 +215,9 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "customer side broadcasts; limit is deterministic via total order.",
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < F.lit("1997-03-15").cast("timestamp"))
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > F.lit("1997-03-15").cast("timestamp"))
+    c = Catalog(spark, sf_dir).table("customer").where(F.col("c_mktsegment") == "BUILDING")
+    o = Catalog(spark, sf_dir).table("orders").where(F.col("o_orderdate") < F.lit("1997-03-15").cast("timestamp"))
+    li = Catalog(spark, sf_dir).table("lineitem").where(F.col("l_shipdate") > F.lit("1997-03-15").cast("timestamp"))
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
@@ -293,8 +289,8 @@ def q_star_schema_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(join-side predicate, not post-filter).",
 )
 def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = Catalog(spark, sf_dir).table("customer")
+    o = Catalog(spark, sf_dir).table("orders")
     return (
         c.join(o, (c.c_custkey == o.o_custkey) & (o.o_orderstatus == "F"), "left")
         .groupBy("c_custkey")
@@ -315,8 +311,8 @@ def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Left-semi join (EXISTS).",
 )
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 400000)
+    c = Catalog(spark, sf_dir).table("customer")
+    o = Catalog(spark, sf_dir).table("orders").where(F.col("o_totalprice") > 400000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
@@ -332,8 +328,8 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(scripts/script_api_apify_to_spark.py:242-247).",
 )
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = Catalog(spark, sf_dir).table("customer")
+    o = Catalog(spark, sf_dir).table("orders").where(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
@@ -354,7 +350,7 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="INTERSECT of customer key sets across two years.",
 )
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     y95 = o.where(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
@@ -378,7 +374,7 @@ def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="EXCEPT (set minus) — the relational core of the snapshot diff.",
 )
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     y95 = o.where(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
@@ -401,10 +397,10 @@ def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
         "assembly (airflow/dags/apify_dag.py:147-168).",
 )
 def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").where(F.col("c_acctbal") > 9000).select(
+    c = Catalog(spark, sf_dir).table("customer").where(F.col("c_acctbal") > 9000).select(
         F.col("c_custkey").alias("key"), F.col("c_name").alias("name"),
         F.lit("customer").alias("kind"))
-    s = _t(spark, sf_dir, "supplier").where(F.col("s_acctbal") > 9000).select(
+    s = Catalog(spark, sf_dir).table("supplier").where(F.col("s_acctbal") > 9000).select(
         F.col("s_suppkey").alias("key"), F.col("s_name").alias("name"),
         F.lit("supplier").alias("kind"))
     return c.unionByName(s)
@@ -427,7 +423,7 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Top-N per group via row_number window (deterministic tie-break).",
 )
 def q_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     w = Window.partitionBy("o_orderpriority").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         o.withColumn("rk", F.row_number().over(w))
@@ -453,7 +449,7 @@ def q_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Running sum + lag delta per customer (ordered analytic window).",
 )
 def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") <= 100)
+    o = Catalog(spark, sf_dir).table("orders").where(F.col("o_custkey") <= 100)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return o.select(
@@ -473,7 +469,7 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Global sort + limit (TakeOrderedAndProject — no full sort at scale).",
 )
 def q_order_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = Catalog(spark, sf_dir).table("customer")
     return (
         c.select("c_custkey", "c_name", "c_acctbal")
         .orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
@@ -506,7 +502,7 @@ def q_order_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the reference's P5 normalizations as native expressions.",
 )
 def q_scalar_expressions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") <= 500)
+    c = Catalog(spark, sf_dir).table("customer").where(F.col("c_custkey") <= 500)
     return c.select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -539,7 +535,7 @@ def q_scalar_expressions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "native functions).",
 )
 def q_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     return (
         o.groupBy(
             F.year("o_orderdate").alias("yr"),
@@ -560,7 +556,7 @@ def q_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "normalization as an engine primitive).",
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").where(F.col("event_id") <= 1000)
+    e = Catalog(spark, sf_dir).table("events").where(F.col("event_id") <= 1000)
     return e.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("int").alias("k"),
@@ -586,7 +582,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "explicit map schema at run time).",
 )
 def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").where(F.col("event_id") <= 2000)
+    e = Catalog(spark, sf_dir).table("events").where(F.col("event_id") <= 2000)
     m = e.select(
         "event_id", "event_type",
         F.from_json("props", "map<string,int>").alias("props_map"),
@@ -638,8 +634,8 @@ def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "when (and only when) the probe side is null-filtered.",
 )
 def q_sql_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = Catalog(spark, sf_dir).table("orders")
+    c = Catalog(spark, sf_dir).table("customer")
     probe = o.select(
         F.when(F.col("o_orderkey") % 1000 == 0, F.lit(None))
         .otherwise(F.col("o_custkey")).alias("pk"))

@@ -17,10 +17,6 @@ from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import local_df, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return Catalog(spark, sf_dir).table(name)
-
-
 _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 
 
@@ -38,7 +34,7 @@ _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
         "conditional counts == the oracle's FILTER aggregates).",
 )
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = Catalog(spark, sf_dir).table("customer")
     out = (c.groupBy("c_nationkey").pivot("c_mktsegment", _SEGMENTS)
            .agg(F.count(F.lit(1))))
     renamed = out.select(
@@ -59,8 +55,8 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is valid while still exercising the approximate-agg physical plan.",
 )
 def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
+    r = Catalog(spark, sf_dir).table("region")
+    n = Catalog(spark, sf_dir).table("nation")
     return (
         r.join(n, n.n_regionkey == r.r_regionkey)
         .groupBy("r_name")
@@ -84,7 +80,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "carries the oracle.",
 )
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     return o.groupBy("o_orderpriority").agg(
         F.round(F.percentile("o_totalprice", F.lit(0.5)), 2).alias("p50"),
         F.round(F.percentile("o_totalprice", F.lit(0.9)), 2).alias("p90"),
@@ -108,9 +104,9 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "suppliers only, or both).",
 )
 def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = (_t(spark, sf_dir, "customer").groupBy(F.col("c_nationkey").alias("k"))
+    c = (Catalog(spark, sf_dir).table("customer").groupBy(F.col("c_nationkey").alias("k"))
          .agg(F.count(F.lit(1)).alias("n_cust")))
-    s = (_t(spark, sf_dir, "supplier").groupBy(F.col("s_nationkey").alias("k"))
+    s = (Catalog(spark, sf_dir).table("supplier").groupBy(F.col("s_nationkey").alias("k"))
          .agg(F.count(F.lit(1)).alias("n_supp")))
     return (
         c.join(s, "k", "full_outer")
@@ -133,8 +129,8 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Catalyst plans BroadcastNestedLoopJoin).",
 )
 def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").select("r_name")
-    s = _t(spark, sf_dir, "orders").select("o_orderstatus").distinct()
+    r = Catalog(spark, sf_dir).table("region").select("r_name")
+    s = Catalog(spark, sf_dir).table("orders").select("o_orderstatus").distinct()
     return r.crossJoin(s).groupBy("r_name", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"))
 
@@ -173,9 +169,9 @@ def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="IN-subquery (compiled to left-semi join against a broadcast dim).",
 )
 def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
+    s = Catalog(spark, sf_dir).table("supplier")
+    n = Catalog(spark, sf_dir).table("nation")
+    r = Catalog(spark, sf_dir).table("region").where(F.col("r_name") == "EUROPE")
     eu = n.join(r, n.n_regionkey == r.r_regionkey).select("n_nationkey")
     return (s.join(eu, s.s_nationkey == eu.n_nationkey, "left_semi")
             .select("s_suppkey", "s_name"))
@@ -193,7 +189,7 @@ def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "multiplicity min(l, r)).",
 )
 def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     lo = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
     hi = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
     return lo.intersectAll(hi)
@@ -210,7 +206,7 @@ def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="EXCEPT ALL (multiset difference: multiplicity max(l - r, 0)).",
 )
 def q_set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     lo = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
     hi = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
     return lo.exceptAll(hi)
@@ -232,7 +228,7 @@ def q_set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_explode_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.functions.text import tokens
-    d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
+    d = Catalog(spark, sf_dir).table("documents").where(F.col("doc_id") < 50)
     return (
         d.select("doc_id", F.posexplode(tokens("text")).alias("pos", "tok"))
         .where(F.col("pos") < 5)
@@ -254,7 +250,7 @@ def q_explode_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "over embedding columns — all inside codegen.",
 )
 def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
+    e = Catalog(spark, sf_dir).table("embeddings").where(F.col("vec_id") < 100)
     dsum = F.aggregate("embedding", F.lit(0.0), lambda a, x: a + x.cast("double"))
     dmax = F.array_max(F.transform("embedding", lambda x: x.cast("double")))
     psum = F.aggregate("embedding", F.lit(0.0),
@@ -339,7 +335,7 @@ def _gender_oracle() -> str:
 )
 def q_gender_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.functions.gender import enrich_gender_native
-    c = _t(spark, sf_dir, "customer")
+    c = Catalog(spark, sf_dir).table("customer")
     names = F.array(*[F.lit(n) for n in _FIRST_NAMES])
     accounts = c.select(
         "c_custkey",
@@ -382,7 +378,7 @@ def q_gender_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "floors back the ANN paths.",
 )
 def q_approx_quantile_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     qs = [0.25, 0.5, 0.75, 0.9]
     est = o.agg(F.percentile_approx(
         "o_totalprice", qs, 100).alias("est")).collect()[0]["est"]
@@ -423,7 +419,7 @@ def q_approx_quantile_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the reshape pair every reporting layer needs.",
 )
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = Catalog(spark, sf_dir).table("customer")
     wide = (c.groupBy("c_nationkey").pivot("c_mktsegment", _SEGMENTS)
             .agg(F.count(F.lit(1))))
     wide = wide.select(
@@ -456,8 +452,8 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "guard with a size cap or slice(array_sort(...), 1, k)).",
 )
 def q_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
+    r = Catalog(spark, sf_dir).table("region")
+    n = Catalog(spark, sf_dir).table("nation")
     return (n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
             .groupBy("r_name")
             .agg(F.count(F.lit(1)).alias("n_nations"),
@@ -497,8 +493,8 @@ def q_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_customer_mode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = Catalog(spark, sf_dir).table("orders")
+    c = Catalog(spark, sf_dir).table("customer").select("c_custkey", "c_mktsegment")
     cnt = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
            .groupBy(F.col("c_mktsegment").alias("seg"),
                     F.col("o_orderpriority").alias("pri"))

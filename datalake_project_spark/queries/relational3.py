@@ -18,10 +18,6 @@ from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return Catalog(spark, sf_dir).table(name)
-
-
 @register(
     "q4_order_priority",
     oracle="""
@@ -39,10 +35,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         "orderkey, date filter pushed to the orders scan.",
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(
+    o = Catalog(spark, sf_dir).table("orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp")))
-    li = _t(spark, sf_dir, "lineitem")
+    li = Catalog(spark, sf_dir).table("lineitem")
     hit = o.join(li, (o.o_orderkey == li.l_orderkey)
                  & (li.l_shipdate > o.o_orderdate), "left_semi")
     return hit.groupBy("o_orderpriority").agg(
@@ -74,13 +70,13 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lineitem shuffles once for the final group-by.",
 )
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = Catalog(spark, sf_dir).table("lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp")))
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    o = Catalog(spark, sf_dir).table("orders")
+    c = Catalog(spark, sf_dir).table("customer")
+    s = Catalog(spark, sf_dir).table("supplier")
+    n = Catalog(spark, sf_dir).table("nation")
     cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
     sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
     joined = (
@@ -129,14 +125,14 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and the fact table shuffles once.",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").where(
+    li = Catalog(spark, sf_dir).table("lineitem")
+    o = Catalog(spark, sf_dir).table("orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")))
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    c = Catalog(spark, sf_dir).table("customer")
+    s = Catalog(spark, sf_dir).table("supplier")
+    n = Catalog(spark, sf_dir).table("nation")
+    r = Catalog(spark, sf_dir).table("region").where(F.col("r_name") == "ASIA")
     cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
     sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -182,12 +178,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "independent (double sums differ in the last ulp across engines).",
 )
 def q10_returned_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = Catalog(spark, sf_dir).table("customer")
+    o = Catalog(spark, sf_dir).table("orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp")))
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = Catalog(spark, sf_dir).table("lineitem").where(F.col("l_returnflag") == "R")
+    n = Catalog(spark, sf_dir).table("nation")
     return (
         li.join(o.select("o_orderkey", "o_custkey"),
                 li.l_orderkey == F.col("o_orderkey"))
@@ -221,10 +217,10 @@ def q10_returned_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         "partial/final reduction, no data shuffle.",
 )
 def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = Catalog(spark, sf_dir).table("lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp")))
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = Catalog(spark, sf_dir).table("part").select("p_partkey", "p_type")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
     return (
@@ -254,9 +250,9 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orderkeys (a tiny set) join orders/customer (broadcast-able).",
 )
 def q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    li = Catalog(spark, sf_dir).table("lineitem")
+    o = Catalog(spark, sf_dir).table("orders")
+    c = Catalog(spark, sf_dir).table("customer")
     big = (li.groupBy("l_orderkey")
            .agg(F.sum("l_quantity").alias("_sq"))
            .where(F.col("_sq") > 180))
@@ -294,8 +290,8 @@ def q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join inside codegen.",
 )
 def q19_bracket_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = Catalog(spark, sf_dir).table("lineitem")
+    p = Catalog(spark, sf_dir).table("part")
     j = li.join(p, li.l_partkey == p.p_partkey)
     br = (
         ((F.col("p_brand") == "Brand#11") & F.col("p_size").between(1, 15)
@@ -327,8 +323,8 @@ def q19_bracket_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rich customers with no order since 1999, by segment.",
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = Catalog(spark, sf_dir).table("customer")
+    o = Catalog(spark, sf_dir).table("orders")
     avg_bal = (c.where(F.col("c_acctbal") > 0)
                .agg(F.avg("c_acctbal").alias("avg_bal")))
     rich = (c.crossJoin(F.broadcast(avg_bal))
@@ -363,10 +359,10 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the fact table).",
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = Catalog(spark, sf_dir).table("lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp")))
-    s = _t(spark, sf_dir, "supplier")
+    s = Catalog(spark, sf_dir).table("supplier")
     rev = (li.groupBy(F.col("l_suppkey").alias("supplier_no"))
            .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
                 .alias("total_revenue")))
@@ -399,8 +395,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#11")
+    li = Catalog(spark, sf_dir).table("lineitem")
+    p = Catalog(spark, sf_dir).table("part").where(F.col("p_brand") == "Brand#11")
     joined = li.join(p.select("p_partkey"),
                      li.l_partkey == F.col("p_partkey"))
     w = Window.partitionBy("l_partkey")
@@ -432,7 +428,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = Catalog(spark, sf_dir).table("orders").select(
         "o_orderkey", "o_custkey", "o_totalprice",
         F.datediff(F.col("o_orderdate"),
                    F.lit("1995-01-01").cast("timestamp")).cast("long").alias("day_no"))
@@ -463,7 +459,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    c = _t(spark, sf_dir, "customer")
+    c = Catalog(spark, sf_dir).table("customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.desc("c_acctbal"), F.asc("c_custkey"))
     return c.select(
@@ -492,7 +488,7 @@ def q_window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key-distribution independence.",
 )
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = Catalog(spark, sf_dir).table("documents")
     keep = (
         ((F.col("lang") == "en") & (F.col("doc_id") % 2 == 0))
         | ((F.col("lang") != "en") & (F.col("doc_id") % 10 == 0))
@@ -529,7 +525,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tie-break column.",
 )
 def q_window_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_custkey") % 100 == 0)
+    o = Catalog(spark, sf_dir).table("orders").where(F.col("o_custkey") % 100 == 0)
     o.createOrReplaceTempView("_ivl_orders")
     return spark.sql("""
         SELECT o_orderkey, o_custkey,

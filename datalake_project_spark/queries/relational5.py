@@ -24,10 +24,6 @@ from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return Catalog(spark, sf_dir).table(name)
-
-
 def _deletion_neighborhood(col, width: int, depth: int):
     """FastSS deletion neighborhood (Bocek et al. 2007) of a fixed-width
     string column as an array expression: every string obtainable by
@@ -147,11 +143,11 @@ def _unit_cost(li: DataFrame) -> DataFrame:
         "the min and the equality join; dims broadcast.",
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    p = _t(spark, sf_dir, "part").where(
+    li = Catalog(spark, sf_dir).table("lineitem")
+    s = Catalog(spark, sf_dir).table("supplier")
+    n = Catalog(spark, sf_dir).table("nation")
+    r = Catalog(spark, sf_dir).table("region").where(F.col("r_name") == "EUROPE")
+    p = Catalog(spark, sf_dir).table("part").where(
         F.col("p_size").isin(5, 15, 25, 35, 45)
         & F.col("p_type").isin("LARGE", "SMALL"))
     eu = (_unit_cost(li)
@@ -187,14 +183,14 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orderkey, every dimension broadcasts.",
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = Catalog(spark, sf_dir).table("customer")
+    o = Catalog(spark, sf_dir).table("orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")))
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    li = Catalog(spark, sf_dir).table("lineitem")
+    s = Catalog(spark, sf_dir).table("supplier")
+    n = Catalog(spark, sf_dir).table("nation")
+    r = Catalog(spark, sf_dir).table("region").where(F.col("r_name") == "ASIA")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -230,9 +226,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "second scan, no collect).",
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_7")
+    li = Catalog(spark, sf_dir).table("lineitem")
+    s = Catalog(spark, sf_dir).table("supplier")
+    n = Catalog(spark, sf_dir).table("nation").where(F.col("n_name") == "NATION_7")
     value = (
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -267,8 +263,8 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "HUGEINT, the round-2 hash-fail class.",
 )
 def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").where(
+    o = Catalog(spark, sf_dir).table("orders")
+    li = Catalog(spark, sf_dir).table("lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp")))
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -298,11 +294,11 @@ def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(brand, type, size) grouping key.",
 )
 def q16_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").where(
+    p = Catalog(spark, sf_dir).table("part").where(
         (F.col("p_brand") != "Brand#3") & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 3, 9, 14, 19, 23, 36, 45))
-    li = _t(spark, sf_dir, "lineitem")
-    bad = _t(spark, sf_dir, "supplier").where(
+    li = Catalog(spark, sf_dir).table("lineitem")
+    bad = Catalog(spark, sf_dir).table("supplier").where(
         F.col("s_name").like("%7")).select("s_suppkey")
     return (li.join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey,
                     "left_anti")
@@ -1154,7 +1150,7 @@ def q_recs_item_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fused in; no window anywhere.",
 )
 def q_orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     m = (o.groupBy(F.year("o_orderdate").alias("yr"),
                    F.month("o_orderdate").alias("mon"))
          .agg(F.sum("o_totalprice").alias("rev")))
@@ -1216,7 +1212,7 @@ def _rfm_seg_sql(cutoff: str) -> str:
         "no quantile tiers.",
 )
 def q_customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
 
     def scored(cutoff: str) -> DataFrame:
         rfm = (o.where(F.col("o_orderdate")
@@ -1275,8 +1271,8 @@ def q_customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_orders_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = Catalog(spark, sf_dir).table("orders")
+    li = Catalog(spark, sf_dir).table("lineitem")
     lat = (li.join(o, li.l_orderkey == o.o_orderkey)
            .groupBy("o_orderkey", "o_orderpriority", "o_orderdate")
            .agg(F.min("l_shipdate").alias("first_ship"))
@@ -1327,9 +1323,9 @@ def q_orders_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast joins.",
 )
 def q_supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = _t(spark, sf_dir, "supplier")
+    li = Catalog(spark, sf_dir).table("lineitem")
+    o = Catalog(spark, sf_dir).table("orders")
+    s = Catalog(spark, sf_dir).table("supplier")
     ret = F.count(F.when(F.col("l_returnflag") == "R", 1))
     ship_days = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate"))
     return (li.join(o, li.l_orderkey == o.o_orderkey)
@@ -1369,7 +1365,7 @@ def q_supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "json_extract.",
 )
 def q_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = Catalog(spark, sf_dir).table("events")
     v = e.select(F.parse_json("props").alias("v"))
     k = v.select(F.expr("variant_get(v, '$.k', 'int')").alias("k"))
     return (k.groupBy((F.col("k") % 10).alias("k_bucket"))
@@ -1410,7 +1406,7 @@ def q_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conditional aggregation.",
 )
 def q_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     m = (o.where(F.year("o_orderdate") <= 1997)
          .groupBy(F.year("o_orderdate").alias("yr"))
          .agg(F.count(F.lit(1)).cast("double").alias("n_orders"),
@@ -1442,8 +1438,8 @@ def q_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
         "check in q_data_quality_audit.",
 )
 def q_unknown_member_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    dim = (_t(spark, sf_dir, "customer")
+    o = Catalog(spark, sf_dir).table("orders")
+    dim = (Catalog(spark, sf_dir).table("customer")
            .where(F.col("c_acctbal") >= 0)
            .select("c_custkey", "c_mktsegment"))
     return (o.join(F.broadcast(dim), o.o_custkey == dim.c_custkey, "left")
@@ -1478,7 +1474,7 @@ def q_unknown_member_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle states the division guard as CASE — same values.",
 )
 def q_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") < 100)
+    o = Catalog(spark, sf_dir).table("orders").where(F.col("o_orderkey") < 100)
     return o.select(
         F.col("o_orderkey").alias("k"),
         F.try_divide("o_totalprice", F.col("o_orderkey") % 10)
@@ -1580,7 +1576,7 @@ def q_recs_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FLOORed 1e4-scaled integers.",
 )
 def q_pricing_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
+    li = Catalog(spark, sf_dir).table("lineitem").where(F.col("l_quantity") > 0)
     unit = F.col("l_extendedprice") / F.col("l_quantity")
     up = (li.groupBy(F.col("l_partkey").alias("partkey"))
           .agg(F.count(F.lit(1)).alias("n_lines"),
@@ -1701,7 +1697,7 @@ def q_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "plan-shape change.",
 )
 def q_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = Catalog(spark, sf_dir).table("documents")
     res = F.col("doc_id") % 3
     variant = (F.when(res == 0, F.upper("source"))
                .when(res == 1, F.col("source"))
@@ -1747,7 +1743,7 @@ def q_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         "engines -> bit-identical doubles under 4-dp rounding.",
 )
 def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = Catalog(spark, sf_dir).table("customer")
 
     def uniform(salt: str):
         h = F.md5(F.concat(F.col("c_custkey").cast("string"), F.lit(salt)))
@@ -1808,7 +1804,7 @@ def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    s = _t(spark, sf_dir, "part").select(
+    s = Catalog(spark, sf_dir).table("part").select(
         "p_partkey", "p_retailprice", "p_size")
     lvl = (s.groupBy("p_retailprice")
            .agg(F.min("p_size").alias("m2"))
@@ -1898,7 +1894,7 @@ def q_sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unchanged at scale.",
 )
 def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = Catalog(spark, sf_dir).table("orders")
     k = F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM"))
     a = o.groupBy(k.alias("k")).agg(F.count(F.lit(1)).alias("n_orders"))
     b = (o.groupBy(k.alias("k"))
@@ -2034,7 +2030,7 @@ def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fixture.",
 )
 def q_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.tuning import dir_bytes, suggest_for_stage
+    from datalake_project_spark.tuning import dir_bytes, width
 
     c = Catalog(spark, sf_dir).table("customer")
     base = c.select("c_custkey", "c_nationkey", "c_name",
@@ -2054,13 +2050,13 @@ def q_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UnsafeRow state across exactly those nodes. Gated on the same
     # >1 MB footprint as _attr_side so bench-scale plans (broadcast,
     # no exchange) are untouched.
-    _big = dir_bytes(f"{sf_dir}/customer.parquet") > (1 << 20)
+    c_bytes = dir_bytes(f"{sf_dir}/customer.parquet")
+    _big = c_bytes > (1 << 20)
     # n_pair is bound unconditionally (None when small) so sized() can
     # never hit an unbound name if a future call site escapes the _big
     # gate — it degrades to a no-op instead of NameError.
-    n_pair = (suggest_for_stage(spark, f"{sf_dir}/customer.parquet",
-                                expansion=200.0,
-                                target_partition_bytes=8 << 20)
+    n_pair = (width(spark, "jvm_shuffle", 200 * c_bytes,
+                    target_bytes=8 << 20)
               if _big else None)
 
     def sized(df, *cols):
@@ -2200,7 +2196,7 @@ def q_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = Catalog(spark, sf_dir).table("lineitem")
     rev = (li.groupBy("l_partkey")
            .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
                       .cast("long")).alias("cents")))

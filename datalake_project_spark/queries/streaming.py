@@ -12,40 +12,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from datalake_project_spark import tuning
 from datalake_project_spark.queries import register
 from datalake_project_spark.streaming import (
     events_stream, run_available_now, sessionized_agg, stream_dedup,
     user_profile_stream, windowed_agg,
 )
-
-
-def _sparts(spark: SparkSession, sf_dir: str, floor: int = 4) -> int:
-    """Footprint-derived state-store partition count for every drain in
-    this module (r12: the session's batch shuffle width gave 32-128
-    state-store instances per stateful operator at fixture scale, and
-    ~95% of stream-join wall went to per-instance commit overhead —
-    see tuning.suggest_stream_state_partitions).
-
-    ``floor`` is the operator-SHAPE floor that binds only when the
-    byte-derived count is smaller (i.e. at bounded-backfill scale; at
-    production the byte count dominates and the floor is dead). r13
-    width sweep at sf0.1, warm min-of-3 wall / per-drain commitTimeMs
-    sum:
-
-    - symmetric-hash JOIN (4 state stores per partition, and the
-      watermark-finalize batch re-commits every instance): width 8 =
-      2.5 s / 6.4 s of commits; width 2 = 2.2 s / 0.65 s -> floor 2.
-    - pure-JVM stateful aggregate (1 store per partition): width 8 =
-      1.3 s / 0.9 s; width 4 = 1.0 s / 0.2 s; width 2 no better ->
-      floor 4 (the module default).
-    - PYTHON-stateful ops (applyInPandasWithState): compute is the
-      per-key Python fold, not commits — width 2 is ~40% SLOWER than
-      width 8 (3.0 s vs 2.2 s) because it serializes the fold -> the
-      call sites keep floor 8.
-    """
-    from datalake_project_spark.tuning import suggest_stream_state_partitions
-    return suggest_stream_state_partitions(spark, f"{sf_dir}/events.parquet",
-                                           min_partitions=floor)
 
 
 @register(
@@ -65,7 +37,8 @@ def _sparts(spark: SparkSession, sf_dir: str, floor: int = 4) -> int:
 def q_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         windowed_agg(events_stream(spark, sf_dir), "1 hour"), "complete",
-        state_partitions=_sparts(spark, sf_dir))
+        state_partitions=tuning.width(spark, "state_agg", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -88,7 +61,9 @@ def q_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         windowed_agg(events_stream(spark, sf_dir), "1 hour", slide="15 minutes"),
-        "complete", state_partitions=_sparts(spark, sf_dir))
+        "complete",
+        state_partitions=tuning.width(spark, "state_agg", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -120,7 +95,8 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         sessionized_agg(events_stream(spark, sf_dir), "30 minutes"), "complete",
-        state_partitions=_sparts(spark, sf_dir))
+        state_partitions=tuning.width(spark, "state_agg", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -132,7 +108,9 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         stream_dedup(events_stream(spark, sf_dir), ["user_id", "event_type"]),
-        "append", state_partitions=_sparts(spark, sf_dir))
+        "append",
+        state_partitions=tuning.width(spark, "state_agg", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -172,8 +150,8 @@ def q_stream_multi_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.size(F.collect_set("user_id")).alias("n_users"),
                 F.round(F.sum("value"), 2).alias("total_value")))
-    return run_available_now(agg, "complete",
-                             state_partitions=_sparts(spark, sf_dir))
+    return run_available_now(agg, "complete", state_partitions=tuning.width(
+        spark, "state_agg", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -200,8 +178,8 @@ def q_stream_dedup_within_watermark(spark: SparkSession,
            .withWatermark("ts", "3650 days")
            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
            .select("user_id", "event_type"))
-    return run_available_now(out, "append",
-                             state_partitions=_sparts(spark, sf_dir))
+    return run_available_now(out, "append", state_partitions=tuning.width(
+        spark, "state_agg", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -242,10 +220,9 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = joined.select(
         "l.signup_event_id", "r.err_event_id", F.col("l.user_id").alias("user_id"),
         (F.unix_micros("r.e_ts") - F.unix_micros("l.s_ts")).alias("lag_us"))
-    # 4-store join shape: floor 2 (see _sparts receipt)
-    return run_available_now(out, "append",
-                             state_partitions=_sparts(spark, sf_dir,
-                                                      floor=2))
+    # 4-store join shape: floor 2 (see tuning.STATE_FLOORS)
+    return run_available_now(out, "append", state_partitions=tuning.width(
+        spark, "state_join", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -266,10 +243,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "updated profile per active user.",
 )
 def q_stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Python-stateful shape: floor 8 (see _sparts receipt)
+    # Python-stateful shape: floor 8 (see tuning.STATE_FLOORS)
     return run_available_now(
         user_profile_stream(events_stream(spark, sf_dir)), "append",
-        state_partitions=_sparts(spark, sf_dir, floor=8))
+        state_partitions=tuning.width(spark, "state_python", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -337,8 +315,9 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = (run_available_now(
         mg_candidate_stream(events_stream(spark, sf_dir),
                             n_shards=8, k=2 * PHI_INV), "update",
-        # Python-stateful shape: floor 8 (see _sparts receipt)
-        state_partitions=_sparts(spark, sf_dir, floor=8))
+        # Python-stateful shape: floor 8 (see tuning.STATE_FLOORS)
+        state_partitions=tuning.width(spark, "state_python", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
         .select("user_id").distinct())
     e = Catalog(spark, sf_dir).table("events")
     tot = e.agg(F.count(F.lit(1)).alias("n_total"))
@@ -388,8 +367,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (joined.groupBy("tier")
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("value"), 2).alias("total_value")))
-    return run_available_now(agg, "complete",
-                             state_partitions=_sparts(spark, sf_dir))
+    return run_available_now(agg, "complete", state_partitions=tuning.width(
+        spark, "state_agg", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -543,10 +522,9 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("l.user_id").alias("user_id"),
                    (F.unix_micros("r.e_ts") - F.unix_micros("l.s_ts"))
                    .alias("lag_us")))
-    # 4-store join shape: floor 2 (see _sparts receipt)
-    return run_available_now(out, "append",
-                             state_partitions=_sparts(spark, sf_dir,
-                                                      floor=2))
+    # 4-store join shape: floor 2 (see tuning.STATE_FLOORS)
+    return run_available_now(out, "append", state_partitions=tuning.width(
+        spark, "state_join", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -598,7 +576,8 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         sessionized_agg(events_stream(spark, sf_dir), "30 minutes",
                         watermark="2 hours"), "append",
-        state_partitions=_sparts(spark, sf_dir))
+        state_partitions=tuning.width(spark, "state_agg", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -645,10 +624,11 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.streaming.ops import rolling_median_stream
 
-    # Python-stateful shape: floor 8 (see _sparts receipt)
+    # Python-stateful shape: floor 8 (see tuning.STATE_FLOORS)
     drained = run_available_now(
         rolling_median_stream(events_stream(spark, sf_dir)), "append",
-        state_partitions=_sparts(spark, sf_dir, floor=8))
+        state_partitions=tuning.width(spark, "state_python", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet")))
     n = F.count(F.lit(1))
     return (drained.groupBy("event_type")
             .agg(n.alias("n_windows"),
@@ -721,8 +701,10 @@ def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    F.floor(F.col("value") / 50.0)
                                    .cast("int")).alias("bucket"))
                   .agg(F.count(F.lit(1)).alias("n")))
-    cur = run_available_now(cur_stream, "complete",
-                            state_partitions=_sparts(spark, sf_dir)) \
+    cur = run_available_now(
+        cur_stream, "complete",
+        state_partitions=tuning.width(spark, "state_agg", tuning.dir_bytes(
+            f"{sf_dir}/events.parquet"))) \
         .withColumn("win", F.lit("cur"))
     base = (Catalog(spark, sf_dir).table("events")
             .where(F.col("value").isNotNull()
@@ -812,8 +794,8 @@ def q_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = daily.select(F.date_format("dw.start", "yyyy-MM-dd").alias("day"),
                        "event_type", "n_events", "n_hours", "total_value",
                        "peak_hour_events")
-    return run_available_now(out, "append",
-                             state_partitions=_sparts(spark, sf_dir))
+    return run_available_now(out, "append", state_partitions=tuning.width(
+        spark, "state_agg", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
 @register(
@@ -887,8 +869,8 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (joined.groupBy("version", "tier")
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("value"), 2).alias("total_value")))
-    return run_available_now(agg, "complete",
-                             state_partitions=_sparts(spark, sf_dir))
+    return run_available_now(agg, "complete", state_partitions=tuning.width(
+        spark, "state_agg", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
 @register(

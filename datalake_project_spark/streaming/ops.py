@@ -48,16 +48,15 @@ def run_available_now(stream_df: DataFrame, output_mode: str,
     return the sink table. Test/backfill entry point — the SAME streaming
     plan that would run continuously, executed to exhaustion.
 
-    ``state_partitions`` (derive it with
-    ``tuning.suggest_stream_state_partitions``) sizes the stateful
-    shuffle — and with it the state-store instance count — for THIS
-    query only: the conf is set for the ``start()`` call, which freezes
-    it into the query's (ephemeral) checkpoint, and restored right
-    after the drain. Without it the query inherits the session's batch
+    ``state_partitions`` (derive it with a ``tuning.width`` state
+    kind) sizes the stateful shuffle — and with it the state-store
+    instance count — for THIS query only: the conf is set for the
+    ``start()`` call, which freezes it into the query's (ephemeral)
+    checkpoint, and restored right after the drain. Without it the query inherits the session's batch
     shuffle width, which at fixture scale means 32-128 state-store
     instances each paying fixed per-commit overhead for a few KB of
     state (the r12 diagnosis: ~95% of stream-join wall in state
-    commits; see the tuning helper's docstring for numbers)."""
+    commits; see tuning.py's state-store notes for numbers)."""
     spark = stream_df.sparkSession
     name = f"dlps_stream_sink_{next(_query_seq)}"
     if state_partitions is None:

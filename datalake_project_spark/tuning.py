@@ -1,4 +1,4 @@
-"""Spill-aware shuffle sizing.
+"""Spill-aware partition sizing: one width policy.
 
 ``spark.sql.shuffle.partitions`` is the one knob that silently breaks at
 scale: the session default that works at sf0.1 gives multi-GB partitions
@@ -7,62 +7,124 @@ empty tasks on small inputs. AQE's coalescing fixes the too-many side at
 runtime but cannot SPLIT a too-large partition of a non-skewed shuffle —
 the initial number must be at least input_bytes / target_partition_bytes.
 
-These helpers derive that number from the actual input footprint (file
-sizes on disk), clamp it to sane bounds, and hand it to a session conf
-or a per-stage ``repartition``. They are advisory arithmetic, not magic:
-the unit test pins the arithmetic, and the engine's session factory
-keeps its local default for fixture-scale work.
+Every sized exchange in the engine asks :func:`width` for that number.
+The caller names the KIND of stage it sizes and the bytes the stage
+carries — ``expansion * dir_bytes(path)``, where ``expansion`` is the
+stage's measured working-set / on-disk-input ratio — and hands the
+result to a keyed ``repartition`` (or a drain's ``state_partitions``).
+Nothing here mutates session conf, so one query's working set never
+depends on whatever the session default happens to be (the r6 scale
+ladder measured q_graph_kcore spilling 6.7 GB at 10x and 20.4 GB at 30x
+purely because the wedge-dedup hash tables were squeezed into 32 static
+partitions). The scan-skew case is sized from the scan's splits rather
+than a footprint; :func:`fan_out_scan` is its one entry.
 """
 
 from __future__ import annotations
 
 import os
 
-DEFAULT_TARGET_PARTITION_BYTES = 128 * 1024 * 1024  # the shuffle-spill sweet spot
-MIN_PARTITIONS = 8
-MAX_PARTITIONS = 200_000  # ~24 TB of 128 MiB partitions per shuffle stage
-# The cores floor stops binding below this per-partition payload: a task
-# carrying less than ~4 MiB is dominated by its own fixed cost, so
-# spreading it wider than the data makes the stage SLOWER (r13 paired
-# A/B at sf0.1/32 cores: q_dedup_prefix_filter 6.6 -> 4.6 s,
-# q_dedup_ngram_jaccard 1.8 -> 1.3 s from capping the floor alone).
+TARGET_BYTES = 128 * 1024 * 1024  # the shuffle-spill sweet spot
+MIN_WIDTH = 8
+MAX_WIDTH = 200_000  # ~24 TB of 128 MiB partitions per shuffle stage
+
+# The JVM cores floor stops binding below this per-partition payload: a
+# task carrying less than ~4 MiB is dominated by its own fixed cost, so
+# spreading it wider than the data makes the stage SLOWER. This floor
+# was a flat 2x cores ("the standard sizing rule" — slack for
+# stragglers); r13 capped it by data density and let the byte term ramp
+# the width past the core count as soon as the footprint justifies it.
+# Measured at sf0.1/32 cores (paired in-session A/B, steal-clean
+# trials): capping alone took q_dedup_prefix_filter 6.6 -> 4.6 s and
+# q_dedup_ngram_jaccard 1.8 -> 1.3 s; cumulative with the 2x -> 1x step,
+# q_dedup_prefix_filter 9.9 -> 4.6 s, q_dedup_ngram_jaccard 2.9 -> 1.3 s,
+# q_dedup_bag_jaccard 3.5 -> 2.5 s, q_dedup_idf_weighted_jaccard 3.9 ->
+# 2.5 s. At production scale the byte term dominates and the floor is
+# dead code.
 SMALL_PARTITION_BYTES = 4 * 1024 * 1024
 
+# Streaming state stores. The stateful-shuffle width is ALSO the number
+# of state-store instances (x2-4 per stateful operator: a symmetric hash
+# join keeps 4 stores per partition), and every instance pays fixed
+# per-micro-batch commit overhead regardless of how little state it
+# holds. The r12 diagnosis measured a 32-partition (128-instance)
+# stream-stream interval join spending ~95% of its wall in state commits
+# over a 40k-row state (sum commitTimeMs ~500 s, wall ~9 s); the same
+# drain at 8 partitions committed in 8.5 s total and ran in 3.7 s. So,
+# unlike batch exchanges, there is NO cores floor: a bounded backfill
+# with tiny state wants FEW instances, while at production scale the
+# byte-derived count exceeds any cluster's core count long before
+# per-partition state reaches the target. State is taken as
+# STATE_EXPANSION x the compressed input bytes. The width is frozen into
+# a checkpoint at first start; that caveat doesn't bind availableNow
+# drains (ephemeral checkpoints) — a continuous 24/7 deployment should
+# size from projected PEAK state and keep that number for the
+# checkpoint's life.
+STATE_TARGET_BYTES = 64 * 1024 * 1024
+STATE_EXPANSION = 4
+# Operator-SHAPE floors, binding only at bounded-backfill scale. r13
+# width sweep at sf0.1, warm min-of-3 wall / per-drain commitTimeMs sum:
+# - symmetric-hash JOIN (4 stores per partition, and the watermark-
+#   finalize batch re-commits every instance): width 8 = 2.5 s / 6.4 s
+#   of commits; width 2 = 2.2 s / 0.65 s -> floor 2.
+# - pure-JVM stateful aggregate (1 store per partition): width 8 =
+#   1.3 s / 0.9 s; width 4 = 1.0 s / 0.2 s; width 2 no better -> floor 4.
+# - PYTHON-stateful ops (applyInPandasWithState): compute is the per-key
+#   Python fold, not commits — width 2 is ~40% SLOWER than width 8
+#   (3.0 s vs 2.2 s) because it serializes the fold -> floor 8.
+STATE_FLOORS = {"state_join": 2, "state_agg": 4, "state_python": 8}
 
-def suggest_shuffle_partitions(
-        input_bytes: int,
-        target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES,
-        cluster_cores: int | None = None,
-        min_partitions: int = MIN_PARTITIONS,
-        max_partitions: int = MAX_PARTITIONS) -> int:
-    """Initial shuffle-partition count for an input of ``input_bytes``.
 
-    ceil(input / target), floored at the cluster's core count (one full
-    wave of tasks even on small shuffles) and clamped to [min, max].
-    AQE then coalesces downward at runtime; it never needs to split
-    upward because the starting count is already fine-grained enough.
+def width(spark, kind: str, nbytes: int,
+          target_bytes: int | None = None) -> int:
+    """Partition count for a stage of ``kind`` carrying ``nbytes``.
 
-    r13 note on the floor: this was a flat 2x cores ("the standard
-    sizing rule" — slack for stragglers). Parallelism only pays while
-    partitions carry real data; past that point every extra task is
-    pure fixed cost. The floor is therefore capped by data density —
-    it never splits the input below ~SMALL_PARTITION_BYTES per task —
-    and the byte term ceil(input/target) ramps the width past the core
-    count smoothly as soon as the footprint justifies it. Measured at
-    sf0.1/32 cores (paired in-session A/B, steal-clean trials,
-    cumulative over both steps): q_dedup_prefix_filter 9.9 -> 4.6 s,
-    q_dedup_ngram_jaccard 2.9 -> 1.3 s, q_dedup_bag_jaccard 3.5 ->
-    2.5 s, q_dedup_idf_weighted_jaccard 3.9 -> 2.5 s; at production
-    scale the byte term dominates and the floor is dead code.
+    ceil(nbytes / target) — one partition per target's worth of bytes —
+    raised to the kind's floor and capped at MAX_WIDTH. AQE then
+    coalesces downward at runtime; it never needs to split upward
+    because the starting count is already fine-grained enough.
+    ``target_bytes`` defaults to TARGET_BYTES (STATE_TARGET_BYTES of
+    state for the state kinds).
+
+    Kinds and their floors:
+
+    - ``jvm_shuffle``: one wave of core-count tasks, capped by data
+      density (never below ~SMALL_PARTITION_BYTES per task), minimum
+      MIN_WIDTH.
+    - ``python_stage``: a stage whose per-row/per-group cost is PYTHON
+      (grouped-map applyInPandas and friends) keeps the FULL cores
+      floor, minimum MIN_WIDTH. The byte-based machinery misprices
+      these stages twice: the density cap assumes a task under ~4 MiB
+      is fixed-cost-dominated — false when every row crosses the Arrow
+      boundary and every group is a Python call — and AQE's coalescing
+      is also byte-based, so a KB-scale grouped-map shuffle coalesces to
+      ONE post-shuffle partition and serializes every group's Python
+      call in a single task (r13 measured q_group_zscore: a 1-task
+      stage, 3.9 s wall / 0.2 s JVM cpu — the rest is one Python worker
+      grinding 1500 groups).
+    - ``state_join`` / ``state_agg`` / ``state_python``: a streaming
+      state store (``nbytes`` is the input footprint, scaled by
+      STATE_EXPANSION inside), no cores floor, the STATE_FLOORS shape
+      floor.
     """
-    if input_bytes < 0:
-        raise ValueError("input_bytes must be >= 0")
-    need = -(-input_bytes // target_partition_bytes)  # ceil div
-    if cluster_cores:
-        floor = min(cluster_cores,
-                    -(-input_bytes // SMALL_PARTITION_BYTES))
-        need = max(need, floor)
-    return int(min(max(need, min_partitions), max_partitions))
+    if nbytes < 0:
+        raise ValueError("nbytes must be >= 0")
+    if kind in STATE_FLOORS:
+        nbytes *= STATE_EXPANSION
+        floor = STATE_FLOORS[kind]
+        target_bytes = target_bytes or STATE_TARGET_BYTES
+    else:
+        cores = spark.sparkContext.defaultParallelism
+        if kind == "jvm_shuffle":
+            floor = min(cores, -(-nbytes // SMALL_PARTITION_BYTES))
+        elif kind == "python_stage":
+            floor = cores
+        else:
+            raise ValueError(f"unknown width kind: {kind!r}")
+        floor = max(floor, MIN_WIDTH)
+        target_bytes = target_bytes or TARGET_BYTES
+    need = -(-nbytes // target_bytes)  # ceil div
+    return int(min(max(need, floor), MAX_WIDTH))
 
 
 def dir_bytes(path: str) -> int:
@@ -82,17 +144,6 @@ def dir_bytes(path: str) -> int:
             except OSError:
                 continue
     return total
-
-
-def apply_shuffle_sizing(spark, *paths: str,
-                         expansion: float = 1.0, **kwargs) -> int:
-    """Set ``spark.sql.shuffle.partitions`` from the combined footprint
-    of ``paths`` (scaled by ``expansion`` for decompression growth).
-    Returns the value applied."""
-    total = int(sum(dir_bytes(p) for p in paths) * expansion)
-    n = suggest_shuffle_partitions(total, **kwargs)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n
 
 
 def _parse_size_bytes(v: str) -> int:
@@ -161,77 +212,3 @@ def fan_out_scan(df, key: str):
         return df
     from pyspark.sql import functions as F
     return df.repartition(w, F.col(key))
-
-
-def python_stage_width(spark, *paths: str, expansion: float = 1.0,
-                       **kwargs) -> int:
-    """Exchange width for a stage whose per-row/per-group cost is PYTHON
-    (grouped-map applyInPandas and friends), handed to an explicit keyed
-    ``repartition`` right before the groupBy.
-
-    Two ways the byte-based machinery misprices these stages: (a) the
-    density-capped cores floor (suggest_shuffle_partitions) assumes a
-    task under ~4 MiB is fixed-cost-dominated — false when every row
-    crosses the Arrow boundary and every group is a Python call; (b)
-    AQE's coalescing is also byte-based, so a KB-scale grouped-map
-    shuffle coalesces to ONE post-shuffle partition and serializes
-    every group's Python call in a single task (r13 measured
-    q_group_zscore: a 1-task stage, 3.9 s wall / 0.2 s JVM cpu — the
-    rest is one Python worker grinding 1500 groups). The explicit
-    repartition pins one full wave of workers; the byte term still
-    ramps the width past the core count at scale."""
-    total = int(sum(dir_bytes(p) for p in paths) * expansion)
-    cores = spark.sparkContext.defaultParallelism
-    need = suggest_shuffle_partitions(total, **kwargs)
-    return max(need, cores)
-
-
-def suggest_stream_state_partitions(spark, *paths: str,
-                                    expansion: float = 4.0,
-                                    target_partition_bytes: int = 64 << 20,
-                                    min_partitions: int = 8,
-                                    max_partitions: int = MAX_PARTITIONS) -> int:
-    """Streaming state-store partition count from the input footprint.
-
-    The stateful-shuffle partition count is ALSO the number of state-
-    store instances (x2-4 per stateful operator: a symmetric hash join
-    keeps 4 stores per partition), and every instance pays fixed
-    per-micro-batch commit overhead regardless of how little state it
-    holds. The r12 diagnosis measured a 32-partition (128-instance)
-    stream-stream interval join spending ~95% of its wall in state
-    commits over a 40k-row state (sum commitTimeMs ~500 s, wall ~9 s);
-    the same drain at 8 partitions committed in 8.5 s total and ran in
-    3.7 s. So, unlike batch exchanges, there is NO cores floor here: a
-    bounded backfill with tiny state wants FEW instances, while at
-    production scale the byte-derived count exceeds any cluster's core
-    count long before per-partition state reaches the target
-    (``expansion`` ~ state-bytes / compressed-input-bytes). The
-    partition count is frozen into a checkpoint at first start; that
-    caveat doesn't bind availableNow drains (ephemeral checkpoints) —
-    a continuous 24/7 deployment should size from projected PEAK state
-    and keep that number for the checkpoint's life.
-    """
-    total = int(sum(dir_bytes(p) for p in paths) * expansion)
-    return suggest_shuffle_partitions(
-        total, target_partition_bytes=target_partition_bytes,
-        min_partitions=min_partitions, max_partitions=max_partitions)
-
-
-def suggest_for_stage(spark, *paths: str, expansion: float = 1.0,
-                      **kwargs) -> int:
-    """Per-STAGE partition count for one heavy exchange, derived from the
-    on-disk footprint of the inputs that stage fans out from.
-
-    Unlike ``apply_shuffle_sizing`` this mutates nothing: the caller
-    hands the number to a keyed ``repartition`` in front of its widest
-    exchange, so one query's working set cannot depend on whatever the
-    session default happens to be (the r6 scale ladder measured
-    q_graph_kcore spilling 6.7 GB at 10x and 20.4 GB at 30x purely
-    because the wedge-dedup hash tables were squeezed into 32 static
-    partitions). ``expansion`` is the measured working-set/input ratio
-    of the stage (a wedge join or pair explosion makes it >> 1); the
-    cores floor keeps small fixtures fully parallel (one task wave —
-    see the r13 floor note on suggest_shuffle_partitions)."""
-    total = int(sum(dir_bytes(p) for p in paths) * expansion)
-    cores = spark.sparkContext.defaultParallelism
-    return suggest_shuffle_partitions(total, cluster_cores=cores, **kwargs)

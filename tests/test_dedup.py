@@ -172,14 +172,13 @@ def test_incremental_exact_dup_is_jaccard_one(spark):
 
 
 def test_scan_fan_out_fires_only_on_narrow_scans(spark, tmp_path):
-    """_scan_fan_out spreads a single-split fixture scan across the
+    """scan_fan_out_width spreads a single-split fixture scan across the
     cluster (r12: the tokenize+shingle pass otherwise runs on ONE core)
     and must be a no-op for in-memory frames and wide-enough scans."""
     from pyspark.sql import functions as F
 
-    from datalake_project_spark.operators.dedup import (
-        _doc_shingles, _scan_fan_out,
-    )
+    from datalake_project_spark.operators.dedup import _doc_shingles
+    from datalake_project_spark.tuning import scan_fan_out_width
 
     cores = spark.sparkContext.defaultParallelism
     # tiny parquet -> one split -> fan out to ONE wave of core-count
@@ -191,16 +190,16 @@ def test_scan_fan_out_fires_only_on_narrow_scans(spark, tmp_path):
                 F.lit("alpha beta gamma delta").alias("text")) \
         .write.mode("overwrite").parquet(str(p))
     docs = spark.read.parquet(str(p))
-    assert _scan_fan_out(docs) == cores
+    assert scan_fan_out_width(docs) == cores
     # in-memory frame: no input files -> no fan-out
     mem = spark.range(5).select(F.col("id").alias("doc_id"),
                                 F.lit("a b c").alias("text"))
-    assert _scan_fan_out(mem) is None
+    assert scan_fan_out_width(mem) is None
     # scan wide enough on its own (simulated via a tiny split target)
     saved = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
-        assert _scan_fan_out(docs) is None
+        assert scan_fan_out_width(docs) is None
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
     # shingle output is identical with and without the fan-out exchange
