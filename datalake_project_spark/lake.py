@@ -8,8 +8,8 @@ by ``os.listdir`` + lexicographic sort
 (`scripts/script_api_apify_to_spark.py:214-236`). Here ``ingest_date``
 and ``run_ts`` are partition COLUMNS written with ``partitionBy``: the
 optimizer partition-prunes (including dynamically, from a join), and
-snapshot resolution is a metadata-only aggregate over the partition
-values — no filesystem walking in application code.
+snapshot resolution lists the ``run_ts`` partitions of one
+``ingest_date`` (no Spark job).
 
 Write semantics match the reference:
 - formatted: append per ``ingest_date`` (K2);
@@ -25,6 +25,7 @@ import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 class Lake:
@@ -95,10 +96,16 @@ class Lake:
 
     # -- readers -----------------------------------------------------------
     def read_usage(self, table: str, ingest_date: str | None = None,
-                   run_ts: str | None = None) -> DataFrame:
+                   run_ts: str | None = None,
+                   schema: StructType | None = None) -> DataFrame:
         """Partition-pruned usage scan (predicates on partition columns
-        never touch data files)."""
-        df = self.spark.read.parquet(self.usage_path(table))
+        never touch data files). ``schema`` names the data columns to
+        read and their types, which skips the schema-inference job; the
+        partition columns are appended from the directory layout."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.parquet(self.usage_path(table))
         if ingest_date is not None:
             df = df.where(F.col("ingest_date") == ingest_date)
         if run_ts is not None:
@@ -219,22 +226,22 @@ class Lake:
 
     def latest_run_before(self, table: str, ingest_date: str,
                           run_ts: str) -> str | None:
-        """Previous-snapshot resolution (reference S7): max(run_ts) among
-        partitions of ``ingest_date`` strictly before ``run_ts``.
+        """Previous-snapshot resolution (reference S7): the largest
+        run_ts of ``ingest_date`` strictly below ``run_ts``, taken from
+        :meth:`list_runs` — a partition listing, no Spark job, as the
+        reference's ``os.listdir`` + sort
+        (`scripts/script_api_apify_to_spark.py:214-236`). ``run_ts``
+        values compare as strings as their directory names spell them, so
+        they must be fixed-width, path-safe tokens (as ``upsert`` needs).
 
-        The scan touches only partition metadata (the filter and the
-        aggregate are on partition columns), so this is a listing-scale
-        job even when the table holds billions of rows.
+        Every listed run partition counts, including one that ``upsert``
+        emptied by tombstoning all its rows: an empty snapshot is still
+        the previous snapshot (a diff against it reports every current
+        row as added).
         """
-        if not self.exists(table):
-            return None
-        row = (
-            self.read_usage(table, ingest_date)
-            .where(F.col("run_ts") < run_ts)
-            .agg(F.max("run_ts").alias("prev"))
-            .first()
-        )
-        return row["prev"] if row else None
+        earlier = [ts for ts in self.list_runs(table, ingest_date)
+                   if ts < run_ts]
+        return earlier[-1] if earlier else None
 
     def rollback(self, table: str, ingest_date: str, to_run: str,
                  new_run: str) -> None:

@@ -61,6 +61,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from datalake_project_spark.lake import Lake
 
@@ -375,8 +376,10 @@ class ManifestLake(Lake):
         return out
 
     def read_usage(self, table: str, ingest_date: str | None = None,
-                   run_ts: str | None = None) -> DataFrame:
-        return self.read_usage_at(table, None, ingest_date, run_ts)
+                   run_ts: str | None = None,
+                   schema: StructType | None = None) -> DataFrame:
+        return self.read_usage_at(table, None, ingest_date, run_ts,
+                                  schema=schema)
 
     # -- orphan reconciliation (Iceberg remove_orphan_files shape) ----------
     def referenced_files(self, table: str) -> set[str]:
@@ -413,17 +416,22 @@ class ManifestLake(Lake):
 
     def read_usage_at(self, table: str, version: int | None,
                       ingest_date: str | None = None,
-                      run_ts: str | None = None) -> DataFrame:
+                      run_ts: str | None = None,
+                      schema: StructType | None = None) -> DataFrame:
         """Snapshot-isolated read: resolve ONE manifest version (latest
         when ``version`` is None) and read only its files. Partition
         pruning is manifest pruning — filtered partitions contribute
         zero files to the scan, the same listing-free skip Iceberg
         does. Partition columns re-enter as literals per entry (their
-        values live in the manifest, not in file paths)."""
+        values live in the manifest, not in file paths). ``schema``, as
+        in :meth:`Lake.read_usage`, names the data columns to read and
+        skips schema inference."""
         if version is None:
             _, m = self._latest(table)
         else:
             m = self._load(table, version)
+        reader = (self.spark.read.option("mergeSchema", "true")
+                  if schema is None else self.spark.read.schema(schema))
         frames = []
         for e in m.get("entries", []):
             d, ts = e["keys"]
@@ -432,18 +440,16 @@ class ManifestLake(Lake):
             if run_ts is not None and ts != run_ts:
                 continue
             if e["files"]:
-                frames.append(self.spark.read.option("mergeSchema", "true")
-                              .parquet(*e["files"])
+                frames.append(reader.parquet(*e["files"])
                               .withColumn("ingest_date", F.lit(d))
                               .withColumn("run_ts", F.lit(ts)))
         if not frames:
             entries = m.get("entries", [])
             if entries and entries[0]["files"]:
                 # Table exists, filter matched nothing: an EMPTY frame
-                # with the table schema (so latest_run_before & friends
-                # see zero rows, not an error — parity with a pruned
-                # directory scan on the base Lake).
-                return (self.spark.read.parquet(*entries[0]["files"])
+                # with the table schema (zero rows, not an error —
+                # parity with a pruned directory scan on the base Lake).
+                return (reader.parquet(*entries[0]["files"])
                         .limit(0)
                         .withColumn("ingest_date",
                                     F.lit(entries[0]["keys"][0]))

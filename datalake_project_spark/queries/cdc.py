@@ -609,9 +609,9 @@ def q_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Time-travel read (AS OF): three run_ts snapshots of one usage "
         "date exist; a reader asking for the state as of 15:00 "
-        "resolves (via Lake.latest_run_before — a metadata-only "
-        "aggregate over the partition column, reference S7's semantics "
-        "without os.listdir) to the 12:00 run and reads exactly that "
+        "resolves (via Lake.latest_run_before — the largest run_ts "
+        "partition below the cutoff, reference S7's listing semantics, "
+        "no Spark job) to the 12:00 run and reads exactly that "
         "partition, partition-pruned. The oracle recomputes the "
         "snapshot content from source and pins the resolved run id — "
         "proving both the resolution rule and the read. Idempotent: "

@@ -927,16 +927,24 @@ def q_price_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH m AS (
         SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS yr,
                CAST(EXTRACT(month FROM o_orderdate) AS INT) AS mo,
-               SUM(o_totalprice) AS rev
+               SUM(CAST(o_totalprice AS DECIMAL(15, 2))) AS rev
         FROM orders GROUP BY 1, 2),
     j AS (
-        SELECT cur.yr, cur.mo, cur.rev, prev.rev AS forecast
+        SELECT cur.rev, ABS(cur.rev - prev.rev) AS err
         FROM m cur JOIN m prev
-          ON prev.yr = cur.yr - 1 AND prev.mo = cur.mo)
-    SELECT COUNT(*) AS n_months,
-           ROUND(AVG(ABS(rev - forecast) / rev), 4) + 0.0 AS mape,
-           ROUND(AVG(ABS(rev - forecast)), 2) + 0.0 AS mae
-    FROM j
+          ON prev.yr = cur.yr - 1 AND prev.mo = cur.mo),
+    s AS (
+        SELECT COUNT(*) AS n,
+               SUM(CAST(err / rev AS DECIMAL(38, 12))) AS ape,
+               CAST(SUM(err) * 100 AS HUGEINT) AS cents
+        FROM j)
+    -- DuckDB's decimal AVG and division return DOUBLE, so the mean
+    -- error is rounded half-up to the cent in integer cents (Spark
+    -- rounds its exact decimal AVG half-up)
+    SELECT n AS n_months,
+           ROUND(ape / n, 4) + 0.0 AS mape,
+           CAST((2 * cents + n) // (2 * n) AS DOUBLE) / 100 AS mae
+    FROM s
     """,
     doc="Seasonal-naive forecast backtest (forecast month m = actual "
         "of month m minus one year) with MAPE/MAE over every month "
@@ -947,19 +955,22 @@ def q_price_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         "months^2-bounded metadata, never fact-table-sized.",
 )
 def q_forecast_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # decimal sums and means are exact, so the result does not depend on
+    # the order partials merge in (double sums put the sf0.01 mae, an
+    # exact half cent, on either side of its rounding)
     o = Catalog(spark, sf_dir).table("orders")
     m = (o.groupBy(F.year("o_orderdate").alias("yr"),
                    F.month("o_orderdate").alias("mo"))
-         .agg(F.sum("o_totalprice").alias("rev")))
+         .agg(F.sum(F.col("o_totalprice").cast("decimal(15,2)")).alias("rev")))
     prev = m.select((F.col("yr") + 1).alias("yr"), F.col("mo"),
                     F.col("rev").alias("forecast"))
+    err = F.abs(F.col("rev") - F.col("forecast"))
     j = m.join(prev, ["yr", "mo"])
     return j.agg(
         F.count(F.lit(1)).alias("n_months"),
-        (F.round(F.avg(F.abs(F.col("rev") - F.col("forecast"))
-                       / F.col("rev")), 4) + F.lit(0.0)).alias("mape"),
-        (F.round(F.avg(F.abs(F.col("rev") - F.col("forecast"))), 2)
-         + F.lit(0.0)).alias("mae"))
+        F.round(F.avg((err / F.col("rev")).cast("decimal(38,12)")), 4)
+        .cast("double").alias("mape"),
+        F.round(F.avg(err), 2).cast("double").alias("mae"))
 
 
 @register(

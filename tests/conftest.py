@@ -1,10 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: the checkout these tests belong to (not whichever copy is installed)
+REPO_ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, REPO_ROOT)
 
 from datalake_project_spark.session import get_spark  # noqa: E402
 

@@ -9,11 +9,7 @@ the Bayesian posterior's symmetry (P(B>A) + P(A>B) = 1).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 SF = "/root/testdata/sf0.001"
 

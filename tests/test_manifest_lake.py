@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from datalake_project_spark.lake import Lake
 from datalake_project_spark.manifest_lake import ManifestLake
+from tests.conftest import REPO_ROOT
 
 D = "2026-02-01"
 
@@ -438,9 +439,13 @@ def test_expire_runs_expires_versions_referencing_deleted_files(
     assert _state(lake, "T02") == {(2, "keep")}
 
 
+def _in_checkout(source: str) -> str:
+    """Prefix a worker script so it imports this checkout's package."""
+    return f"import sys\nsys.path.insert(0, {REPO_ROOT!r})\n" + source
+
+
 HAMMER = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 from datalake_project_spark.manifest_lake import ManifestLake
 from datalake_project_spark.session import get_spark
 
@@ -470,7 +475,7 @@ def test_multiprocess_concurrent_upserts_no_lost_update(spark, tmp_path):
     lake = ManifestLake(spark, str(tmp_path))
     lake.write_usage(_df(spark, [(0, "seed")]), "t", D, "T01")
     script = tmp_path / "hammer.py"
-    script.write_text(HAMMER)
+    script.write_text(_in_checkout(HAMMER))
     procs = [subprocess.Popen(
         [_sys.executable, str(script), str(tmp_path), tag, "3"],
         stdout=subprocess.PIPE, stderr=subprocess.PIPE)
@@ -506,7 +511,6 @@ def test_unbounded_scan_keeps_null_only_files(spark, tmp_path):
 
 CRASH_WORKER = r"""
 import sys, json, os
-sys.path.insert(0, "/root/repo")
 from datalake_project_spark.manifest_lake import ManifestLake
 from datalake_project_spark.session import get_spark
 
@@ -542,7 +546,7 @@ def test_sigkill_mid_commit_leaves_table_consistent(spark, tmp_path):
     lake = ManifestLake(spark, str(tmp_path))
     lake.write_usage(_df(spark, [(99, "seed")]), "t", D, "T01")
     script = tmp_path / "crash_worker.py"
-    script.write_text(CRASH_WORKER)
+    script.write_text(_in_checkout(CRASH_WORKER))
     proc = subprocess.Popen([_sys.executable, str(script), str(tmp_path)],
                             stdout=subprocess.DEVNULL,
                             stderr=subprocess.DEVNULL)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datalake_project_spark.lake import Lake
+from datalake_project_spark.manifest_lake import ManifestLake
 from datalake_project_spark.pipeline import run_pipeline
 from datalake_project_spark.sources.json_ingest import (
     ingest_records, normalize_payload, read_json_files)
@@ -94,6 +95,98 @@ def test_global_diff(spark, lake):
     got = {(r["username"], r["change"])
            for r in out["final_global_comparatif"].collect()}
     assert got == {("new", "added_global"), ("gone", "deleted_global")}
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn()`` under its own job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _persisted(spark):
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_run_releases_persisted_frames(spark, lake):
+    before = _persisted(spark)
+    for ts in ("1000", "1100"):
+        run_pipeline(spark, lake, {"a1": _payload(["alice", "zed"]),
+                                   "a2": _payload(["bob"])},
+                     _lookup_df(spark), "20250301", ts)
+        assert _persisted(spark) == before
+
+
+def test_failed_write_releases_persisted_frames(spark, lake, monkeypatch):
+    payloads = {"a1": _payload(["alice"]), "a2": _payload(["bob"])}
+    run_pipeline(spark, lake, payloads, _lookup_df(spark), "20250301", "1000")
+    before = _persisted(spark)
+    real = Lake.write_usage
+
+    def failing(self, df, table, *args, **kwargs):
+        if table.startswith("comparatif_"):
+            raise RuntimeError("diff write failed")
+        return real(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Lake, "write_usage", failing)
+    with pytest.raises(RuntimeError, match="diff write failed"):
+        run_pipeline(spark, lake, payloads, _lookup_df(spark),
+                     "20250301", "1100")
+    assert _persisted(spark) == before
+
+
+#: Spark jobs one two-account diffing run with a global diff submits:
+#: 18 with each account's enriched frame persisted and the previous
+#: snapshot resolved by listing (the same at 1, 4 and 8 cores), against
+#: 38 when every consumer recomputed the frame
+MAX_DIFF_RUN_JOBS = 18
+
+
+def test_diffing_run_job_budget(spark, lake):
+    lookup = _lookup_df(spark)
+    run_pipeline(spark, lake, {"a1": _payload(["alice", "bob", "zed"]),
+                               "a2": _payload(["carol", "dora"])},
+                 lookup, "20250301", "1000")
+    old = lake.read_usage("final_aggregated", "20250301", "1000") \
+        .select("username", "full_name")
+    _, n = _jobs(spark, "pipeline_job_budget", lambda: run_pipeline(
+        spark, lake, {"a1": _payload(["alice", "eve", "zed"]),
+                      "a2": _payload(["carol", "fred"])},
+        lookup, "20250301", "1100", old_snapshot=old))
+    assert 0 < n <= MAX_DIFF_RUN_JOBS
+
+
+def test_latest_run_before_on_manifest_lake(spark, tmp_path):
+    lake = ManifestLake(spark, str(tmp_path / "mlake"))
+    assert lake.latest_run_before("t", "20250301", "1000") is None
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    for ts in ("0900", "1100", "1000"):
+        lake.write_usage(df, "t", "20250301", ts)
+    lake.write_usage(df, "t", "20250302", "0930")
+    got, n = _jobs(spark, "manifest_latest_run", lambda: [
+        lake.latest_run_before("t", "20250301", ts)
+        for ts in ("0900", "0930", "1100", "1200")])
+    assert got == [None, "0900", "1000", "1100"]
+    assert n == 0
+
+
+def test_latest_run_before_counts_upsert_emptied_run(spark, lake):
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    lake.write_usage(df, "t", "20250301", "0900")
+    lake.write_usage(df, "t", "20250301", "1000")
+    tombstones = spark.createDataFrame(
+        [(1, "a", True), (2, "b", True)], "id long, v string, gone boolean")
+    lake.upsert(tombstones, "t", "20250301", "1000", keys=["id"],
+                delete_col="gone")
+    assert lake.read_usage("t", "20250301", "1000").count() == 0
+    # an emptied run is still a snapshot: it is the previous one
+    got, n = _jobs(spark, "emptied_latest_run",
+                   lambda: lake.latest_run_before("t", "20250301", "1100"))
+    assert (got, n) == ("1000", 0)
 
 
 # --- payload-shape handling (reference S2) --------------------------------

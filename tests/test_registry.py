@@ -4,9 +4,6 @@ and the flagship entry() smoke path works at sf0.001."""
 from __future__ import annotations
 
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from datalake_project_spark.queries import load_all
 

@@ -14,10 +14,11 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from datalake_project_spark.catalog import TABLES  # noqa: E402
 from datalake_project_spark.queries import load_all  # noqa: E402

@@ -26,8 +26,9 @@ Usage: python tools/plan_sweep.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from datalake_project_spark.plans.introspect import (  # noqa: E402
     simple_plan, single_partition_sort_smells)
