@@ -17,6 +17,7 @@ import os
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 # The driver-generated star schema + LLM-operator tables (TESTDATA.md).
 TABLES = (
@@ -25,6 +26,52 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+#: path -> (st_size, st_mtime_ns, data schema) of the last inference
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def file_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark reads from the Parquet file at ``path``, inferred
+    once per (size, mtime): later reads pass it to ``.schema(...)`` and
+    run no inference job. A rewritten file gets a new key, so a changed
+    schema surfaces on the next read.
+
+    Testdata parquet stores TIMESTAMP(NANOS), which Spark throws on
+    (PARQUET_TYPE_ILLEGAL) unless ``spark.sql.legacy.parquet.nanosAsLong``
+    is on. Callers may hand us any SparkSession (the correctness driver
+    uses a vanilla one), so it is set here, before every batch or stream
+    read of a fixture file; it is runtime-settable on this build.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    st = os.stat(path)
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[:2] != (st.st_size, st.st_mtime_ns):
+        hit = (st.st_size, st.st_mtime_ns, spark.read.parquet(path).schema)
+        _SCHEMAS[path] = hit
+    return hit[2]
+
+
+# Timestamp columns whose parquet physical type varies by fixture
+# generator version: TIMESTAMP(NANOS) reads as int64 under nanosAsLong;
+# TIMESTAMP(MICROS) with isAdjustedToUTC=false reads as TIMESTAMP_NTZ.
+# The engine's contract type is TIMESTAMP (session-local, UTC sessions)
+# at microsecond precision, so time functions (unix_micros, date_format)
+# resolve; both variants are normalized to it by contract_ts.
+_VARIANT_TS_COLS = {"events": ("ts",)}
+
+
+def contract_ts(df: DataFrame, name: str) -> DataFrame:
+    """Normalize table ``name``'s variant timestamp columns of a batch or
+    streaming scan to the engine's TIMESTAMP contract."""
+    dtypes = dict(df.dtypes)
+    for col in _VARIANT_TS_COLS.get(name, ()):
+        if dtypes.get(col) == "bigint":
+            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+        elif dtypes.get(col) == "timestamp_ntz":
+            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    return df
 
 
 class Catalog:
@@ -39,33 +86,15 @@ class Catalog:
     def path(self, name: str) -> str:
         return f"{self.sf_dir}/{name}.parquet"
 
-    # Timestamp columns whose parquet physical type varies by fixture
-    # generator version: TIMESTAMP(NANOS) reads as int64 under
-    # spark.sql.legacy.parquet.nanosAsLong (session.py); TIMESTAMP(MICROS)
-    # with isAdjustedToUTC=false reads as TIMESTAMP_NTZ. The engine's
-    # contract type is TIMESTAMP (session-local, UTC sessions) at
-    # microsecond precision, so time functions (unix_micros, date_format)
-    # resolve; both variants are normalized to it here.
-    _NANOS_TS_COLS = {"events": ["ts"]}
-
     def table(self, name: str) -> DataFrame:
-        """Lazy Parquet scan; Catalyst prunes columns/filters at the scan."""
+        """Lazy Parquet scan with the file's known schema; Catalyst prunes
+        columns/filters at the scan. Each Catalog builds its own frames,
+        so two instances give distinct attribute ids (self-joins stay
+        unambiguous); only the schema is shared."""
         if name not in self._cache:
-            # Session-independent nanos handling: testdata parquet stores
-            # TIMESTAMP(NANOS), which Spark throws on (PARQUET_TYPE_ILLEGAL)
-            # unless this legacy conf is on. Our own session sets it at build
-            # (session.py), but callers may hand us any SparkSession (the
-            # correctness driver uses a vanilla one), so set it at runtime
-            # here — it is runtime-settable on this build.
-            self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = self.spark.read.parquet(self.path(name))
-            for col in self._NANOS_TS_COLS.get(name, []):
-                dt = dict(df.dtypes).get(col)
-                if dt == "bigint":
-                    df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-                elif dt == "timestamp_ntz":
-                    df = df.withColumn(col, F.col(col).cast("timestamp"))
-            self._cache[name] = df
+            path = self.path(name)
+            df = self.spark.read.schema(file_schema(self.spark, path)).parquet(path)
+            self._cache[name] = contract_ts(df, name)
         return self._cache[name]
 
     def register_views(self, names: tuple[str, ...] = TABLES) -> None:

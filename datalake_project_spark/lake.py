@@ -13,15 +13,16 @@ snapshot resolution lists the ``run_ts`` partitions of one
 
 Write semantics match the reference:
 - formatted: append per ``ingest_date`` (K2);
-- usage: overwrite per (``ingest_date``, ``run_ts``) — with
-  ``partitionOverwriteMode=dynamic`` (session factory) a re-run replaces
-  only its own partition, which makes re-runs idempotent WITHOUT the
-  whole-table truncation a naive overwrite would do at 100 TB (K3).
+- usage: overwrite per (``ingest_date``, ``run_ts``) — each write passes
+  ``partitionOverwriteMode=dynamic`` as a writer option, so a re-run
+  replaces only its own partition whatever the session's conf says
+  (re-runs are idempotent WITHOUT the whole-table truncation a naive
+  overwrite would do at 100 TB, K3) and the session conf is never
+  touched, from any thread or ``foreachBatch`` session clone.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -34,41 +35,6 @@ class Lake:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-
-    @contextlib.contextmanager
-    def _dynamic_overwrite(self, session: SparkSession | None = None):
-        """Session-independent K3 semantics: overwrite must replace only
-        the partitions present in the written data. Scoped save/restore
-        (writes are eager, so the conf only needs to hold for the write
-        call) — constructing a Lake must NOT silently change overwrite
-        semantics for a caller's own unrelated writes on the same session.
-
-        The conf must be set on the session that OWNS the DataFrame being
-        written: Structured Streaming hands ``foreachBatch`` a DataFrame
-        bound to a cloned session with isolated conf, and setting the key
-        on the original session would leave the clone in static-overwrite
-        mode (each batch would truncate the whole table).
-        """
-        sess = session or self.spark
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = sess.conf.get(key, None)
-        if prev is not None and prev.lower() == "dynamic":
-            # already dynamic (the engine session default): nothing to
-            # toggle — and a read-only path here makes concurrent lake
-            # writes from driver threads safe (r12: run_pipeline
-            # overlaps independent per-account writes, guide §2.6;
-            # a set/unset pair racing across threads could strip the
-            # conf mid-write)
-            yield
-            return
-        sess.conf.set(key, "dynamic")
-        try:
-            yield
-        finally:
-            if prev is None:
-                sess.conf.unset(key)
-            else:
-                sess.conf.set(key, prev)
 
     # -- paths -------------------------------------------------------------
     def formatted_path(self, table: str) -> str:
@@ -88,11 +54,11 @@ class Lake:
                     run_ts: str) -> None:
         """Usage layer snapshot, dynamic-overwrite of exactly the
         (ingest_date, run_ts) partition (K3)."""
-        with self._dynamic_overwrite(df.sparkSession):
-            (df.withColumn("ingest_date", F.lit(ingest_date))
-             .withColumn("run_ts", F.lit(run_ts))
-             .write.mode("overwrite").partitionBy("ingest_date", "run_ts")
-             .parquet(self.usage_path(table)))
+        (df.withColumn("ingest_date", F.lit(ingest_date))
+         .withColumn("run_ts", F.lit(run_ts))
+         .write.mode("overwrite").partitionBy("ingest_date", "run_ts")
+         .option("partitionOverwriteMode", "dynamic")
+         .parquet(self.usage_path(table)))
 
     # -- readers -----------------------------------------------------------
     def read_usage(self, table: str, ingest_date: str | None = None,
@@ -215,13 +181,13 @@ class Lake:
             # write-to-staging + partition swap does the same job without
             # holding the partition in executor storage.
             staged = part.drop("ingest_date", "run_ts").localCheckpoint(eager=True)
-            with self._dynamic_overwrite(staged.sparkSession):
-                (staged
-                 .repartition(target_files)
-                 .withColumn("ingest_date", F.lit(ingest_date))
-                 .withColumn("run_ts", F.lit(run_ts))
-                 .write.mode("overwrite").partitionBy("ingest_date", "run_ts")
-                 .parquet(self.usage_path(table)))
+            (staged
+             .repartition(target_files)
+             .withColumn("ingest_date", F.lit(ingest_date))
+             .withColumn("run_ts", F.lit(run_ts))
+             .write.mode("overwrite").partitionBy("ingest_date", "run_ts")
+             .option("partitionOverwriteMode", "dynamic")
+             .parquet(self.usage_path(table)))
         return before
 
     def latest_run_before(self, table: str, ingest_date: str,

@@ -292,23 +292,6 @@ def _minhash_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     return [(rng.randrange(1, 1 << 20), rng.randrange(0, 1 << 20)) for _ in range(num_perm)]
 
 
-def minhash_signature(shingle_arr: Column, num_perm: int = 64, seed: int = 42) -> Column:
-    """Array of ``num_perm`` minhash values for a shingle array — pure
-    higher-order-function expression, no UDF, no explode."""
-    params = _minhash_params(num_perm, seed)
-
-    def perm_hash(a: int, b: int):
-        # factory (not default-arg lambda): PySpark requires the lambda
-        # passed to higher-order functions to take exactly 1-2 params.
-        def h(s):
-            base = F.pmod(F.xxhash64(s), F.lit(MERSENNE31))
-            return F.pmod(F.lit(a) * base + F.lit(b), F.lit(MERSENNE31))
-        return h
-
-    mins = [F.array_min(F.transform(shingle_arr, perm_hash(a, b))) for a, b in params]
-    return F.array(*mins)
-
-
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                       n: int = 3, num_perm: int = 64, bands: int = 16,
                       threshold: float = 0.5, seed: int = 42) -> DataFrame:

@@ -87,21 +87,11 @@ def run_pipeline(spark: SparkSession, lake: Lake,
         # scheduler happily overlaps jobs; a later job's tasks back-fill
         # executors the earlier job's tail leaves idle). 2-3 in flight is
         # plenty; Spark's conf/jobDescription are thread-local-safe here
-        # and the lake's dynamic-overwrite guard is read-only on the
-        # engine session (lake.py). Results keep payload order.
+        # and the lake's dynamic overwrite is a per-write option that
+        # never touches the session conf (lake.py). Results keep payload
+        # order.
         per_account: dict[str, DataFrame] = {}
         if len(payloads) > 1:
-            # The concurrent lake writes below are race-free ONLY because
-            # Lake._dynamic_overwrite takes its read-only fast path when the
-            # session default is already 'dynamic'; the engine's session
-            # factory sets that, but run_pipeline must not silently depend
-            # on which factory built the session — on any other session a
-            # worker thread could run its overwrite under STATIC mode while
-            # another thread races the guard's set/unset pair, truncating
-            # the whole usage table (r12 ADVICE). Pin the default once,
-            # up front, on the driver thread.
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           "dynamic")
             from concurrent.futures import ThreadPoolExecutor
 
             from pyspark import inheritable_thread_target

@@ -1535,36 +1535,26 @@ def q_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "either predicate skips — is pinned separately with parquet "
         "footer inspection (tests/test_layout.py); this registers "
         "the layout operator itself in the value-checked surface. "
-        "Build-once per fixture (size+mtime key, stale-sibling "
-        "cleanup — the bucketed-table discipline); at 100 TB this "
+        "Build-once per fixture file (scratch.build_once, size+mtime "
+        "key, stale keys pruned); at 100 TB this "
         "rewrite is the periodic OPTIMIZE job whose cost amortizes "
         "over every 2-D slice after it.",
 )
 def q_zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from datalake_project_spark.operators.scale import interleave_bits
-    from datalake_project_spark.scratch import scratch_dir
+    from datalake_project_spark.scratch import build_once
 
-    root = scratch_dir("zorder", sf_dir)
-    src = f"{sf_dir.rstrip('/')}/lineitem.parquet"
-    st = os.stat(src)
-    path = os.path.join(root, f"z_{st.st_size}_{int(st.st_mtime)}")
-    if not os.path.isdir(path):
-        if os.path.isdir(root):
-            for stale in os.listdir(root):
-                if stale.startswith("z_"):
-                    shutil.rmtree(os.path.join(root, stale),
-                                  ignore_errors=True)
+    def build(tmp: str) -> None:
         li = Catalog(spark, sf_dir).table("lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
         zkey = interleave_bits(F.col("l_orderkey") % 256,
                                F.col("l_partkey") % 256, bits=8)
         (li.withColumn("z", zkey).repartitionByRange(8, "z")
          .sortWithinPartitions("z").drop("z")
-         .write.mode("overwrite").parquet(path + ".tmp"))
-        os.replace(path + ".tmp", path)
+         .write.mode("overwrite").parquet(tmp))
+
+    path = build_once("zorder", sf_dir,
+                      [f"{sf_dir.rstrip('/')}/lineitem.parquet"], build)
     back = spark.read.parquet(path)
     sel = back.where((F.col("l_orderkey") % 256 < 32)
                      & (F.col("l_partkey") % 256 < 32))

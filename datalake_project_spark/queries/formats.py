@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import register
-from datalake_project_spark.scratch import scratch_dir
+from datalake_project_spark.scratch import build_once, scratch_dir
 
 
 def _nation_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,26 +215,18 @@ def q_file_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pages_for(sf_dir: str) -> str:
     """Deterministic JSON page files derived from the documents table
-    (doc_id < 200, 4 pages by doc_id % 4) — built once per fixture in
-    scratch, keyed by source size+mtime with stale-key cleanup (the
-    bucketed-join/IVF cache discipline). Built via pyarrow directly:
+    (doc_id < 200, 4 pages by doc_id % 4) — built once per fixture file
+    by ``scratch.build_once``. Built via pyarrow directly:
     metadata-scale (200 rows), no Spark job."""
     import json
     import os
-    import shutil
 
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    root = scratch_dir("json_pages", sf_dir)
-    pdir = os.path.join(root, f"{st.st_size}_{int(st.st_mtime)}")
-    if not os.path.isdir(pdir):
-        if os.path.isdir(root):
-            for d in os.listdir(root):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        tmp = pdir + ".tmp"
-        os.makedirs(tmp, exist_ok=True)
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
         t = pq.read_table(src, columns=["doc_id", "source"])
         rows = sorted(
             ({"doc_id": int(i), "source": s}
@@ -245,8 +237,8 @@ def _pages_for(sf_dir: str) -> str:
         for p in range(4):
             with open(os.path.join(tmp, f"page_{p:03d}.json"), "w") as f:
                 json.dump([r for r in rows if r["doc_id"] % 4 == p], f)
-        os.replace(tmp, pdir)
-    return pdir
+
+    return build_once("json_pages", sf_dir, [src], build)
 
 
 @register(

@@ -212,26 +212,17 @@ def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _partitioned_orders_for(spark: SparkSession, sf_dir: str) -> str:
     """Build-once year-partitioned copy of orders (partition column
-    ``o_year``), keyed by the source file's (size, mtime) — the IVF-
-    index lifecycle: a regenerated fixture triggers a rebuild, and
-    stale siblings are pruned so scratch never accumulates."""
-    import os
-    import shutil
+    ``o_year``), keyed by the source file's (size, mtime) through
+    ``scratch.build_once`` — the IVF-index lifecycle."""
+    from datalake_project_spark.scratch import build_once
 
-    from datalake_project_spark.scratch import scratch_dir
-
-    src = f"{sf_dir.rstrip('/')}/orders.parquet"
-    st = os.stat(src)
-    root = scratch_dir("dpp_orders", sf_dir)
-    path = f"{root}/{st.st_size}_{int(st.st_mtime)}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        if os.path.isdir(root):
-            for stale in os.listdir(root):
-                shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
+    def build(tmp: str) -> None:
         o = Catalog(spark, sf_dir).table("orders")
         (o.withColumn("o_year", F.year("o_orderdate"))
-         .write.mode("overwrite").partitionBy("o_year").parquet(path))
-    return path
+         .write.mode("overwrite").partitionBy("o_year").parquet(tmp))
+
+    return build_once("dpp_orders", sf_dir,
+                      [f"{sf_dir.rstrip('/')}/orders.parquet"], build)
 
 
 @register(

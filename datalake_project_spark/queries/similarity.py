@@ -128,28 +128,16 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_index_for(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once IVF index path for one embeddings table. Keyed by the
-    source file's (size, mtime) so a regenerated fixture triggers a
-    rebuild; otherwise every probe reuses the stored index — the
-    train-once / probe-many lifecycle the 100 TB design calls for."""
-    import os
+    """Build-once IVF index path for one embeddings table
+    (``scratch.build_once``): a regenerated fixture triggers a rebuild;
+    otherwise every probe reuses the stored index — the train-once /
+    probe-many lifecycle the 100 TB design calls for."""
+    from datalake_project_spark.scratch import build_once
 
-    from datalake_project_spark.scratch import scratch_dir
-
-    src = f"{sf_dir.rstrip('/')}/embeddings.parquet"
-    st = os.stat(src)
-    root = scratch_dir('ivf', sf_dir)
-    index_path = f"{root}/{st.st_size}_{int(st.st_mtime)}"
-    if not os.path.exists(f"{index_path}/centroids/_SUCCESS"):
-        # a regenerated fixture orphans the previous (size, mtime) key —
-        # drop stale siblings so scratch doesn't accumulate dead indexes
-        import shutil
-        if os.path.isdir(root):
-            for stale in os.listdir(root):
-                shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
-        e = Catalog(spark, sf_dir).table("embeddings")
-        build_ivf_index(e, index_path, n_clusters=16)
-    return index_path
+    return build_once(
+        "ivf", sf_dir, [f"{sf_dir.rstrip('/')}/embeddings.parquet"],
+        lambda tmp: build_ivf_index(
+            Catalog(spark, sf_dir).table("embeddings"), tmp, n_clusters=16))
 
 
 @register(

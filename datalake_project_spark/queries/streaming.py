@@ -371,6 +371,42 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "state_agg", tuning.dir_bytes(f"{sf_dir}/events.parquet")))
 
 
+def _events_time_split(spark: SparkSession, sf_dir: str) -> str:
+    """The events table staged as two files split at the median ``ts``,
+    ``half0.parquet`` then ``half1.parquet`` with increasing mtimes, so
+    a FileStreamSource with ``maxFilesPerTrigger=1`` drains them as two
+    ordered micro-batches. Built once per fixture file
+    (``scratch.build_once``) and shared by the queries that stream it;
+    any time split keeps their invariants, the median only balances the
+    batches."""
+    import glob
+    import os
+    import shutil
+
+    from datalake_project_spark.catalog import Catalog
+    from datalake_project_spark.scratch import build_once
+
+    src = f"{sf_dir.rstrip('/')}/events.parquet"
+
+    def build(tmp: str) -> None:
+        e = Catalog(spark, sf_dir).table("events")
+        med = e.agg(F.percentile_approx(F.unix_micros("ts"), 0.5)
+                    .alias("m")).first()["m"]
+        mtime = os.path.getmtime(src)
+        halves = (F.unix_micros("ts") <= med, F.unix_micros("ts") > med)
+        for i, pred in enumerate(halves):
+            written = os.path.join(tmp, f"_half{i}")
+            e.where(pred).coalesce(1).write.parquet(written)
+            dst = os.path.join(tmp, f"half{i}.parquet")
+            os.replace(glob.glob(os.path.join(written, "part-*.parquet"))[0],
+                       dst)
+            shutil.rmtree(written)
+            # FileStreamSource orders micro-batches by mtime
+            os.utime(dst, (mtime + i, mtime + i))
+
+    return build_once("stream_halves", sf_dir, [src], build)
+
+
 @register(
     "q_stream_merge_upsert",
     oracle="""
@@ -384,8 +420,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
     doc="Streaming CDC MERGE: the events table is staged as two "
-        "time-split files (build-once per fixture, size+mtime key with "
-        "stale cleanup) so maxFilesPerTrigger=1 yields two ordered "
+        "time-split files (built once per fixture file and shared "
+        "with q_stream_incremental_topk) so maxFilesPerTrigger=1 yields two ordered "
         "micro-batches; each batch reduces to its latest-event-per-user "
         "rows and UPSERTS them into one lake state partition via "
         "foreachBatch + Lake.upsert (streaming/sinks."
@@ -400,7 +436,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state partition rewrites per batch.",
 )
 def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
     import os
     import shutil
 
@@ -412,32 +447,8 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.streaming.sinks import stream_upsert_to_lake
 
     root = scratch_dir("stream_merge", sf_dir)
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    st = os.stat(src)
-    in_dir = os.path.join(root, f"in_{st.st_size}_{int(st.st_mtime)}")
     e = Catalog(spark, sf_dir).table("events")
-
-    if not os.path.isdir(in_dir):
-        if os.path.isdir(root):  # stale-key cleanup, bucketed-cache style
-            for stale in os.listdir(root):
-                if stale.startswith("in_"):
-                    shutil.rmtree(os.path.join(root, stale),
-                                  ignore_errors=True)
-        # any time split preserves the invariant (later half wins per
-        # key == global latest); the median just balances the batches
-        med = e.agg(F.percentile_approx(F.unix_micros("ts"), 0.5)
-                    .alias("m")).first()["m"]
-        os.makedirs(in_dir)
-        halves = (F.unix_micros("ts") <= med, F.unix_micros("ts") > med)
-        for i, pred in enumerate(halves):
-            tmp = os.path.join(root, f"_stage{i}")
-            e.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(in_dir, f"half{i}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            # FileStreamSource orders micro-batches by mtime
-            os.utime(dst, (st.st_mtime + i, st.st_mtime + i))
+    in_dir = _events_time_split(spark, sf_dir)
 
     lake = Lake(spark, os.path.join(root, "lake"))
     shutil.rmtree(lake.usage_path("user_state"), ignore_errors=True)
@@ -898,7 +909,6 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_incremental_topk(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    import glob
     import os
     import shutil
 
@@ -907,29 +917,8 @@ def q_stream_incremental_topk(spark: SparkSession,
 
     K = 10
     root = scratch_dir("stream_topk", sf_dir)
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    st = os.stat(src)
-    in_dir = os.path.join(root, f"in_{st.st_size}_{int(st.st_mtime)}")
     e = Catalog(spark, sf_dir).table("events")
-
-    if not os.path.isdir(in_dir):
-        if os.path.isdir(root):  # stale-key cleanup
-            for stale in os.listdir(root):
-                if stale.startswith("in_"):
-                    shutil.rmtree(os.path.join(root, stale),
-                                  ignore_errors=True)
-        med = e.agg(F.percentile_approx(F.unix_micros("ts"), 0.5)
-                    .alias("m")).first()["m"]
-        os.makedirs(in_dir)
-        halves = (F.unix_micros("ts") <= med, F.unix_micros("ts") > med)
-        for i, pred in enumerate(halves):
-            tmp = os.path.join(root, f"_stage{i}")
-            e.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(in_dir, f"half{i}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.utime(dst, (st.st_mtime + i, st.st_mtime + i))
+    in_dir = _events_time_split(spark, sf_dir)
 
     state_dir = os.path.join(root, "state")
     shutil.rmtree(state_dir, ignore_errors=True)

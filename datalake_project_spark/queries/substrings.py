@@ -481,38 +481,25 @@ def _apply_merge(df: DataFrame, a: str, b: str) -> DataFrame:
 def _learn_bpe_merges(spark: SparkSession, sf_dir: str,
                       n_rounds: int) -> list[tuple]:
     """Train-once wrapper: the learned merge table is persisted to
-    scratch keyed by the source file's (size, mtime) — the same
-    build-once lifecycle as the IVF index (`similarity._ivf_index_for`).
-    A tokenizer is trained once and applied many times; re-deriving the
-    merges on every encode pass would bill the training loop to every
-    consumer (q_text_bpe_train AND q_text_bpe_encode both need them).
+    scratch by ``scratch.build_once``, keyed by the source file's (size,
+    mtime) and ``n_rounds`` — the same build-once lifecycle as the IVF
+    index (`similarity._ivf_index_for`). A tokenizer is trained once and
+    applied many times; re-deriving the merges on every encode pass would
+    bill the training loop to every consumer (q_text_bpe_train AND
+    q_text_bpe_encode both need them).
     """
     import json
-    import os
-    import shutil
 
-    from datalake_project_spark.scratch import scratch_dir
+    from datalake_project_spark.scratch import build_once
 
-    src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    st = os.stat(src)
-    root = scratch_dir("bpe", sf_dir)
-    path = f"{root}/{st.st_size}_{int(st.st_mtime)}_{n_rounds}.json"
-    if os.path.exists(path):
-        with open(path) as fh:
-            return [tuple(m) for m in json.load(fh)]
-    # a regenerated fixture orphans the previous key — drop stale files
-    if os.path.isdir(root):
-        for stale in os.listdir(root):
-            p = os.path.join(root, stale)
-            shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
-                else os.remove(p)
-    merges = _train_bpe_merges(spark, sf_dir, n_rounds)
-    os.makedirs(root, exist_ok=True)
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(merges, fh)
-    os.replace(tmp, path)
-    return merges
+    def train(tmp: str) -> None:
+        with open(tmp, "w") as fh:
+            json.dump(_train_bpe_merges(spark, sf_dir, n_rounds), fh)
+
+    path = build_once("bpe", sf_dir, [f"{sf_dir.rstrip('/')}/documents.parquet"],
+                      train, suffix=f"_{n_rounds}.json")
+    with open(path) as fh:
+        return [tuple(m) for m in json.load(fh)]
 
 
 def _train_bpe_merges(spark: SparkSession, sf_dir: str,

@@ -1,5 +1,6 @@
 """Scratch-space resolution for queries that materialize intermediate
-state (write-roundtrip lake partitions, persisted IVF indexes).
+state (write-roundtrip lake partitions, persisted IVF indexes), and
+:func:`build_once` for artifacts derived from fixture files.
 
 The scratch root is NOT hardcoded to a checkout location: it resolves, in
 order, (1) the ``DATALAKE_SPARK_SCRATCH`` env var, (2) a ``.scratch``
@@ -14,8 +15,10 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 from pathlib import Path
+from typing import Callable, Iterable
 
 
 def scratch_root() -> str:
@@ -40,7 +43,7 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
     a ``.src`` marker, and every resolution best-effort prunes sibling
     dirs of the same kind whose recorded source no longer exists (the
     pytest-tmp_path fixtures that accumulated 40+ dead cache dirs by
-    round 4). Same stale-key discipline as the bucketed/IVF caches."""
+    round 4). Keys inside one dir are :func:`build_once`'s to prune."""
     sf_abs = os.path.abspath(sf_dir.rstrip("/"))
     digest = hashlib.sha1(sf_abs.encode()).hexdigest()[:8]
     tag = f"{os.path.basename(sf_abs) or 'sf'}_{digest}"
@@ -58,11 +61,42 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
     return path
 
 
+def build_once(kind: str, sf_dir: str, sources: Iterable[str],
+               build: Callable[[str], object], suffix: str = "") -> str:
+    """Path of the artifact ``build`` derives from ``sources``, built at
+    most once per (size, mtime) of every source.
+
+    The artifact is ``<key>`` in ``scratch_dir(kind, sf_dir)``, the key
+    spelling each source's size and mtime (``suffix`` appends what the
+    sources do not determine, such as a build parameter). A miss removes
+    every other entry of the kind but the ``.src`` marker (a regenerated
+    fixture orphans them), runs ``build(tmp)`` to write a file or
+    directory at ``<key>.tmp`` and publishes it with ``os.replace``: a
+    build that raises or is killed publishes nothing, and the next call
+    rebuilds from scratch."""
+    root = scratch_dir(kind, sf_dir)
+    key = "_".join(f"{st.st_size}_{st.st_mtime_ns}"
+                   for st in map(os.stat, sources)) + suffix
+    path = os.path.join(root, key)
+    if not os.path.exists(path):
+        for name in os.listdir(root):
+            if name != ".src":
+                _remove(os.path.join(root, name))
+        build(path + ".tmp")
+        os.replace(path + ".tmp", path)
+    return path
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        os.remove(path)
+
+
 def _prune_stale_siblings(root: str, kind: str) -> None:
     """Remove ``<kind>_*`` scratch dirs whose recorded source input dir
     has vanished (dead pytest tmp dirs). Best-effort, never raises."""
-    import shutil
-
     prefix = f"{kind}_"
     try:
         entries = os.listdir(root)
@@ -101,7 +135,6 @@ def prune_stale(root: str | None = None) -> list[str]:
     pytest-tmp caches never accumulate across rounds. Returns removed
     paths; best-effort, never raises."""
     import re
-    import shutil
     import time
 
     root = root or scratch_root()

@@ -45,8 +45,11 @@ def run_available_now(stream_df: DataFrame, output_mode: str,
                       state_partitions: int | None = None) -> DataFrame:
     """Drain a streaming DataFrame to a batch result: process every
     available file with ``trigger(availableNow=True)``, sink to memory,
-    return the sink table. Test/backfill entry point — the SAME streaming
-    plan that would run continuously, executed to exhaustion.
+    return the sink's rows. Test/backfill entry point — the SAME
+    streaming plan that would run continuously, executed to exhaustion.
+    The sink's temp view is dropped once the result frame is resolved:
+    the frame keeps the sink itself, so the session holds no view per
+    drain.
 
     ``state_partitions`` (derive it with a ``tuning.width`` state
     kind) sizes the stateful shuffle — and with it the state-store
@@ -59,17 +62,11 @@ def run_available_now(stream_df: DataFrame, output_mode: str,
     commits; see tuning.py's state-store notes for numbers)."""
     spark = stream_df.sparkSession
     name = f"dlps_stream_sink_{next(_query_seq)}"
-    if state_partitions is None:
-        q = (
-            stream_df.writeStream.format("memory").queryName(name)
-            .outputMode(output_mode).trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        return spark.table(name)
     with _conf_lock:
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(state_partitions))
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(state_partitions))
         try:
             q = (
                 stream_df.writeStream.format("memory").queryName(name)
@@ -78,7 +75,9 @@ def run_available_now(stream_df: DataFrame, output_mode: str,
             q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def windowed_agg(events: DataFrame, window: str = "1 hour",

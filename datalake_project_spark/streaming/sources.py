@@ -4,60 +4,26 @@ File-based Structured Streaming source over the ``events`` table. A
 FileStreamSource monitors a DIRECTORY and picks up files as they land —
 exactly the shape of the reference's raw layer, where each hourly run
 drops a new file under the table directory
-(`scripts/script_api_apify_to_spark.py:125-137`). For the single-file
-fixture tables we stage a symlink into a temp directory; in production
-the table path IS the monitored directory and new snapshot files become
-new micro-batches.
+(`scripts/script_api_apify_to_spark.py:125-137`). A single-file fixture
+table is monitored through a directory holding one symlink to it, built
+once per fixture file in scratch; in production the table path IS the
+monitored directory and new snapshot files become new micro-batches.
 
-Fixture generators have stored ``ts`` as parquet TIMESTAMP(NANOS)
-(surfacing as int64 nanoseconds under
-``spark.sql.legacy.parquet.nanosAsLong``) or TIMESTAMP(MICROS)
-(surfacing as a native timestamp). Streaming file sources need a
-declared schema, so the physical type is detected from the parquet
-footer with a batch peek and the declared ``ts`` field + conversion
-follow it — same microsecond-timestamp contract as the batch Catalog
-(`datalake_project_spark/catalog.py`).
+Streaming file sources need a declared schema. It is the batch
+Catalog's: ``catalog.file_schema`` infers it once per (size, mtime) of
+the file, so building a stream runs no job, and ``catalog.contract_ts``
+normalizes ``ts`` to the same microsecond-timestamp contract as a batch
+read (`datalake_project_spark/catalog.py`).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
-    TimestampNTZType, TimestampType,
-)
+from pyspark.sql import DataFrame, SparkSession
 
-_TS_TYPES = {
-    "bigint": LongType(),
-    "timestamp_ntz": TimestampNTZType(),
-    "timestamp": TimestampType(),
-}
-
-
-def _events_schema(ts_dtype: str) -> StructType:
-    """Explicit schema: streaming file sources require one (no inference
-    pass), which is also the right call at scale — schema-on-write
-    (SURVEY §4.1)."""
-    return StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", _TS_TYPES[ts_dtype]),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ])
-
-
-def stage_dir(*files: str) -> str:
-    """Symlink files into a fresh temp directory (a FileStreamSource needs
-    a directory to monitor; fixture tables are single files)."""
-    d = tempfile.mkdtemp(prefix="dlps_stream_")
-    for f in files:
-        os.symlink(os.path.abspath(f), os.path.join(d, os.path.basename(f)))
-    return d
+from datalake_project_spark.catalog import contract_ts, file_schema
+from datalake_project_spark.scratch import build_once
 
 
 def events_stream(spark: SparkSession, sf_dir: str,
@@ -66,20 +32,14 @@ def events_stream(spark: SparkSession, sf_dir: str,
     schema (``ts`` as microsecond timestamp). ``max_files_per_trigger``
     throttles micro-batch size for live deployments."""
     path = f"{sf_dir.rstrip('/')}/events.parquet"
-    # Footer-only batch peek: TIMESTAMP(NANOS) surfaces as bigint under
-    # nanosAsLong (set session-independently, as in Catalog.table);
-    # TIMESTAMP(MICROS) with isAdjustedToUTC=false surfaces as
-    # timestamp_ntz. Either way the stream is normalized to the engine's
-    # TIMESTAMP (session-local, UTC sessions) microsecond contract.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_dtype = dict(spark.read.parquet(path).dtypes).get("ts", "timestamp")
-    reader = spark.readStream.schema(_events_schema(ts_dtype))
+    reader = spark.readStream.schema(file_schema(spark, path))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    monitored = stage_dir(path) if os.path.isfile(path) else path
-    df = reader.parquet(monitored)
-    if ts_dtype == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    monitored = path
+    if os.path.isfile(path):
+        def link(tmp: str) -> None:
+            os.makedirs(tmp)
+            os.symlink(os.path.abspath(path),
+                       os.path.join(tmp, os.path.basename(path)))
+        monitored = build_once("stream_events", sf_dir, [path], link)
+    return contract_ts(reader.parquet(monitored), "events")

@@ -189,6 +189,27 @@ def test_latest_run_before_counts_upsert_emptied_run(spark, lake):
     assert (got, n) == ("1000", 0)
 
 
+def test_run_on_static_session_keeps_conf_and_partitions(spark, lake):
+    """A two-account run (concurrent lake writes) on a session whose
+    default is static overwrite leaves that default alone, and each
+    run still replaces only its own partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        for ts in ("1000", "1100"):
+            run_pipeline(spark, lake, {"a1": _payload(["alice", "zed"]),
+                                       "a2": _payload(["bob"])},
+                         _lookup_df(spark), "20250301", ts)
+            assert spark.conf.get(key) == "static"
+        assert lake.read_usage("final_aggregated").count() == 6
+        assert lake.read_usage("apify_instagram_data_a1").count() == 4
+        assert lake.list_runs("apify_instagram_data_a2", "20250301") == [
+            "1000", "1100"]
+    finally:
+        spark.conf.set(key, prev)
+
+
 # --- payload-shape handling (reference S2) --------------------------------
 
 def test_normalize_payload_shapes():
@@ -198,6 +219,19 @@ def test_normalize_payload_shapes():
     assert normalize_payload({"username": "a"}) == [{"username": "a"}]
     with pytest.raises(TypeError):
         normalize_payload("not a payload")
+
+
+def test_dump_raw_keeps_each_payload_shape_verbatim(tmp_path):
+    import json
+
+    from datalake_project_spark.sources.json_ingest import dump_raw
+
+    recs = [{"username": "a", "full_name": "A"}, {"username": "b"}]
+    for i, payload in enumerate((recs, {"items": recs, "next": None},
+                                 {"username": "c", "extra": [1, 2]})):
+        path = tmp_path / "raw" / f"acct{i}" / "payload.json"
+        dump_raw(payload, str(path))
+        assert json.loads(path.read_text()) == payload
 
 
 def test_ingest_missing_and_extra_keys(spark):
@@ -239,7 +273,7 @@ def test_es_option_assembly():
 def test_lake_write_does_not_mutate_session_conf(spark, tmp_path):
     """Constructing/using a Lake must not silently flip
     partitionOverwriteMode for the caller's own unrelated writes
-    (round-2 advice): the conf is scoped save/restore around the write."""
+    (round-2 advice): dynamic overwrite is a per-write option."""
     from datalake_project_spark.lake import Lake
 
     key = "spark.sql.sources.partitionOverwriteMode"

@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
 from datalake_project_spark import scratch
 
 
@@ -46,3 +48,40 @@ def test_prune_ignores_non_keyed_names(tmp_path):
     os.utime(plain, (past, past))
     assert scratch.prune_stale(str(tmp_path)) == []
     assert os.path.exists(plain)
+
+
+def test_build_once_publishes_only_finished_builds(tmp_path, monkeypatch):
+    """A build that raises publishes nothing and the next call rebuilds;
+    a hit never rebuilds; a rewritten source gets a new key, and pruning
+    the old one keeps the ``.src`` marker."""
+    monkeypatch.setenv("DATALAKE_SPARK_SCRATCH", str(tmp_path / "scratch"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "t.parquet"
+    src.write_bytes(b"v1")
+    builds = []
+
+    def failing(tmp):
+        os.makedirs(tmp)
+        (open(os.path.join(tmp, "half0"), "w")).close()
+        raise RuntimeError("build failed")
+
+    def build(tmp):
+        builds.append(tmp)
+        with open(tmp, "w") as fh:
+            fh.write(src.read_text())
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        scratch.build_once("k", str(sf), [str(src)], failing)
+    root = scratch.scratch_dir("k", str(sf))
+    assert not [n for n in os.listdir(root) if not n.endswith((".tmp", ".src"))]
+
+    path = scratch.build_once("k", str(sf), [str(src)], build)
+    assert scratch.build_once("k", str(sf), [str(src)], build) == path
+    assert len(builds) == 1 and open(path).read() == "v1"
+    assert sorted(os.listdir(root)) == sorted([".src", os.path.basename(path)])
+
+    src.write_bytes(b"v2!")
+    new = scratch.build_once("k", str(sf), [str(src)], build)
+    assert new != path and open(new).read() == "v2!" and len(builds) == 2
+    assert sorted(os.listdir(root)) == sorted([".src", os.path.basename(new)])

@@ -26,6 +26,63 @@ def test_stream_is_streaming(spark):
     assert dict(s.dtypes)["ts"] == "timestamp"
 
 
+def test_events_stream_builds_without_jobs(spark):
+    """Once the events file's schema is known, building its stream runs
+    no Spark job (no inference peek)."""
+    events_stream(spark, SF)
+    sc = spark.sparkContext
+    sc.setJobGroup("events_stream_build", "events_stream_build")
+    try:
+        events_stream(spark, SF, max_files_per_trigger=1)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("events_stream_build") == []
+
+
+def test_drain_leaves_no_temp_view(spark):
+    before = len(spark.catalog.listTables())
+    got = run_available_now(windowed_agg(events_stream(spark, SF)), "complete")
+    assert len(spark.catalog.listTables()) == before
+    assert got.count() == windowed_agg(
+        Catalog(spark, SF).table("events")).count()
+
+
+def test_interrupted_time_split_does_not_change_next_drain(
+        spark, tmp_path, monkeypatch):
+    """A staging of the two time-split event files that dies after its
+    first half must not be reused: the next run drains both halves."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+    from pyspark.sql.window import Window
+
+    from datalake_project_spark.queries import load_all
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF}/events.parquet", sf / "events.parquet")
+    query = load_all()["q_stream_merge_upsert"].fn
+    real, calls = DataFrameWriter.parquet, []
+
+    def second_half_fails(self, path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            raise RuntimeError("staging interrupted")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", second_half_fails)
+    with pytest.raises(RuntimeError, match="staging interrupted"):
+        query(spark, str(sf))
+    monkeypatch.undo()
+
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+    exp = (Catalog(spark, str(sf)).table("events")
+           .withColumn("rk", F.row_number().over(w)).where("rk = 1")
+           .groupBy("event_type").agg(F.count(F.lit(1)).alias("n_users")))
+    assert _rows(query(spark, str(sf)), "event_type") == \
+        _rows(exp, "event_type")
+
+
 def test_windowed_agg_matches_batch(spark):
     got = run_available_now(windowed_agg(events_stream(spark, SF)), "complete")
     exp = windowed_agg(Catalog(spark, SF).table("events"))
