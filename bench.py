@@ -9,7 +9,8 @@ r11, so since r13 stdout carries ONLY the headline summary and the
 `trials` detail lives in BENCHDETAIL.json):
   {"metric": "...", "value": <total_sec>, "unit": "sec", "core26": ...,
    "core26_trials": N, "queries": {<CORE suite only>: sec},
-   "n_queries": N, "sf": <sf>}
+   "n_queries": N, "sf": <sf>, "cpus": <defaultParallelism>,
+   "master": "local[N]"}
 
 Since r8 the CORE suite runs SPARK_GRAFT_BENCH_TRIALS (default 3) full
 passes and reports the per-query MIN — the host carries external
@@ -42,6 +43,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datalake_project_spark.queries import load_all  # noqa: E402
+from datalake_project_spark.receipt import steal_pct, steal_ticks  # noqa: E402
 from datalake_project_spark.session import get_spark  # noqa: E402
 
 # The round-1/2 suite, frozen in content and order: its subtotal
@@ -346,20 +348,6 @@ ADDITIONS = [
 HEADLINE = CORE + ADDITIONS
 
 
-def _cpu_ticks() -> tuple[int, int]:
-    """(steal_ticks, total_ticks) from /proc/stat. This VM shares a
-    hypervisor with noisy neighbors: the r13 baseline capture saw 3-4 s
-    queries read 20-30 s with NOTHING else running in the VM — loadavg
-    only rises as a symptom (tasks pile up), while steal time measures
-    the theft directly. (0, 0) where /proc/stat is unavailable."""
-    try:
-        with open("/proc/stat") as fh:
-            vals = [int(x) for x in fh.readline().split()[1:]]
-        return (vals[7] if len(vals) > 7 else 0), sum(vals)
-    except Exception:
-        return 0, 0
-
-
 def _settle_load(threshold: float = 2.0, max_wait_s: float = 120.0,
                  poll_s: float = 5.0) -> dict:
     """Bounded wait for ambient load to settle before timing anything.
@@ -456,12 +444,11 @@ def main() -> None:
 
     def timed(name: str, tag: str) -> float:
         spec = registry[name]
-        s0, tk0 = _cpu_ticks()
+        s0 = steal_ticks()
         t0 = time.perf_counter()
         n = spec.fn(spark, sf_dir).count()
         dt = round(time.perf_counter() - t0, 3)
-        s1, tk1 = _cpu_ticks()
-        last_steal[0] = round(100.0 * (s1 - s0) / max(tk1 - tk0, 1), 1)
+        last_steal[0] = steal_pct(s0, steal_ticks())
         print(f"# {tag}{name}: {dt:.3f}s ({n} rows, "
               f"steal {last_steal[0]:.1f}%)", file=sys.stderr)
         return dt
@@ -553,6 +540,8 @@ def main() -> None:
         "load": load_receipt,
         "n_queries": len(timings),
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     print(json.dumps(summary), flush=True)
 
@@ -561,24 +550,17 @@ def main() -> None:
     # plan regression in a non-HEADLINE query shows up in the series —
     # not just the HEADLINE set. Skip with SPARK_GRAFT_BENCH_FULL=0.
     if os.environ.get("SPARK_GRAFT_BENCH_FULL", "1") != "0":
-        for name, spec in registry.items():
+        for name in registry:
             if name in timings:
                 continue
-            s0, tk0 = _cpu_ticks()
-            t0 = time.perf_counter()
             try:
-                n = spec.fn(spark, sf_dir).count()
+                timings[name] = timed(name, "")
             except Exception as e:  # noqa: BLE001 - sweep must finish
                 print(f"# {name}: ERR {type(e).__name__}: {e}",
                       file=sys.stderr)
                 continue
-            s1, tk1 = _cpu_ticks()
-            timings[name] = round(time.perf_counter() - t0, 3)
             tail_load[name] = round(os.getloadavg()[0], 2)
-            tail_steal[name] = round(100.0 * (s1 - s0)
-                                     / max(tk1 - tk0, 1), 1)
-            print(f"# {name}: {timings[name]:.3f}s ({n} rows, "
-                  f"steal {tail_steal[name]:.1f}%)", file=sys.stderr)
+            tail_steal[name] = last_steal[0]
         # contention re-runs for the single-pass sweep (r12 verdict task
         # #3: the committed r12 sweep read q_stream_stream_join at 25.2 s
         # under loadavg 8.2 — an artifact the settle gate can't prevent

@@ -14,6 +14,8 @@ engine supports without writing a driver program.
                                              [--limit N] [--json]
     python -m datalake_project_spark sdp [--module M[:factory]]
                                              [--sf-dir D] [--storage DIR]
+    python -m datalake_project_spark receipt QUERY [QUERY ...]
+                                             [--sf-dir D] [--trials N]
 
 Output goes to stdout (``--json`` = one JSON object per row, the
 machine-readable mode); plans come from ``explain(formatted)``. The
@@ -109,6 +111,22 @@ def cmd_sdp(args) -> int:
     return 0
 
 
+def cmd_receipt(args) -> int:
+    """Run queries in a session of their own and print one receipt
+    (see :mod:`datalake_project_spark.receipt`) per (query, trial)."""
+    from datalake_project_spark.queries import load_all
+    from datalake_project_spark.receipt import record
+
+    unknown = [q for q in args.queries if q not in load_all()]
+    if unknown:
+        print(f"unknown queries {unknown}; see "
+              f"`python -m datalake_project_spark list`", file=sys.stderr)
+        return 2
+    for receipt in record(args.queries, args.sf_dir, args.trials):
+        print(json.dumps(receipt))
+    return 0
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="datalake_project_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -170,6 +188,15 @@ def main(argv: list[str] | None = None) -> int:
     pd.add_argument("--limit", type=int, default=20)
     pd.add_argument("--json", action="store_true")
     pd.set_defaults(fn=cmd_sdp)
+
+    pt = sub.add_parser(
+        "receipt",
+        help="per-(query, trial) receipt from the event log: phase "
+             "split, stages, spill nodes, micro-batches, steal%%")
+    pt.add_argument("queries", nargs="+")
+    pt.add_argument("--sf-dir", default="/root/testdata/sf0.001")
+    pt.add_argument("--trials", type=int, default=1)
+    pt.set_defaults(fn=cmd_receipt)
 
     args = p.parse_args(argv)
     return args.fn(args)

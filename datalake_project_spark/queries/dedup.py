@@ -1590,7 +1590,7 @@ def q_dedup_idf_weighted_jaccard(spark: SparkSession,
     # similarity with any_value() and needs NO post-aggregate join —
     # the 60x attribution put 1.3 GB of disk spill in the two SMJ
     # sorts that joined the 67.8 M-row pair table to the per-doc
-    # weight table (tools/spill_attr.py). Exchanges are footprint-
+    # weight table (the receipt's `spill_nodes`). Exchanges are footprint-
     # sized at the kcore-style 16 MB per-partition target: the byte term
     # overtakes the density-capped cores floor once the pair working set
     # passes 16 MB x cores rather than 128 MB x cores (at sf0.1 both

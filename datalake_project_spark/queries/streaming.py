@@ -138,12 +138,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_multi_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.catalog import Catalog
-    from datalake_project_spark.scratch import scratch_dir
+    from datalake_project_spark.scratch import build_once
 
-    staged = scratch_dir("stream_multibatch", sf_dir)
     ev = Catalog(spark, sf_dir).table("events") \
         .select("event_id", "user_id", "event_type", "value", "ts")
-    ev.repartition(4).write.mode("overwrite").parquet(staged)
+    staged = build_once(
+        "stream_multibatch", sf_dir, [f"{sf_dir.rstrip('/')}/events.parquet"],
+        lambda tmp: ev.repartition(4).write.parquet(tmp))
     stream = (spark.readStream.schema(ev.schema)
               .option("maxFilesPerTrigger", "1").parquet(staged))
     agg = (stream.groupBy("event_type")
@@ -270,17 +271,23 @@ def q_stream_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "streaming counterpart of q_write_roundtrip.",
 )
 def q_stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
+
     from datalake_project_spark.lake import Lake
     from datalake_project_spark.scratch import scratch_dir
     from datalake_project_spark.streaming.sinks import (
         run_ts_of_batch, stream_to_lake,
     )
 
-    lake = Lake(spark, scratch_dir("stream_lake", sf_dir))
+    root = scratch_dir("stream_lake", sf_dir)
+    lake = Lake(spark, root)
     # fresh checkpoint per run: the single staged source file re-lands as
     # batch 0, and dynamic overwrite of that partition makes it idempotent
+    ckpt = os.path.join(root, "ckpt")
+    shutil.rmtree(ckpt, ignore_errors=True)
     q = stream_to_lake(events_stream(spark, sf_dir), lake, "events_landed",
-                       ingest_date="20240101")
+                       ingest_date="20240101", checkpoint_dir=ckpt)
     q.awaitTermination()
     landed = lake.read_usage("events_landed", "20240101", run_ts_of_batch(0))
     return (landed.groupBy("event_type")
@@ -452,6 +459,8 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lake = Lake(spark, os.path.join(root, "lake"))
     shutil.rmtree(lake.usage_path("user_state"), ignore_errors=True)
+    ckpt = os.path.join(root, "ckpt")
+    shutil.rmtree(ckpt, ignore_errors=True)
 
     def latest_per_user(batch: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(F.desc("ts"),
@@ -464,7 +473,7 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
               .option("maxFilesPerTrigger", "1").parquet(in_dir))
     q = stream_upsert_to_lake(stream, lake, "user_state", "20240101",
                               "state", keys=["user_id"],
-                              transform=latest_per_user)
+                              checkpoint_dir=ckpt, transform=latest_per_user)
     q.awaitTermination()
 
     return (lake.read_usage("user_state", "20240101", "state")

@@ -19,8 +19,6 @@ pattern (with Delta/Iceberg swap the writer for MERGE, same shape).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame
 
 from datalake_project_spark.lake import Lake
@@ -32,37 +30,31 @@ def run_ts_of_batch(batch_id: int) -> str:
 
 
 def stream_to_lake(stream_df: DataFrame, lake: Lake, table: str,
-                   ingest_date: str, checkpoint_dir: str | None = None,
-                   available_now: bool = True):
-    """Sink a stream into the usage layer, one ``run_ts`` partition per
-    micro-batch. Returns the started StreamingQuery (caller awaits)."""
+                   ingest_date: str, checkpoint_dir: str):
+    """Drain a stream into the usage layer (``availableNow``), one
+    ``run_ts`` partition per micro-batch. Returns the started
+    StreamingQuery (caller awaits)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         lake.write_usage(batch_df, table, ingest_date, run_ts_of_batch(batch_id))
 
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(write_batch)
-        .option("checkpointLocation",
-                checkpoint_dir or tempfile.mkdtemp(prefix="dlps_ckpt_"))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream_df.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
 
 
 def stream_upsert_to_lake(stream_df: DataFrame, lake: Lake, table: str,
                           ingest_date: str, run_ts: str, keys: list[str],
-                          checkpoint_dir: str | None = None,
-                          available_now: bool = True,
-                          transform=None, delete_col: str | None = None):
+                          checkpoint_dir: str, transform=None,
+                          delete_col: str | None = None):
     """CDC MERGE sink: every micro-batch upserts into ONE state partition
     (last-writer-wins per key) instead of landing as its own ``run_ts``
     partition — the streaming materialized-upsert pattern (Delta's
     ``foreachBatch`` + MERGE INTO, here via the Parquet partition-rewrite
-    ``Lake.upsert``). ``transform`` (optional) reduces each raw batch to
-    its per-key change rows first (e.g. latest-event-per-key), so the
-    upsert payload is key-sized, not batch-sized. Replayed batches
+    ``Lake.upsert``), drained with ``availableNow``. ``transform``
+    (optional) reduces each raw batch to its per-key change rows first
+    (e.g. latest-event-per-key), so the upsert payload is key-sized,
+    not batch-sized. Replayed batches
     re-apply the same per-key rows, which the replace-on-match semantics
     make idempotent. Returns the started StreamingQuery (caller awaits).
     """
@@ -73,12 +65,6 @@ def stream_upsert_to_lake(stream_df: DataFrame, lake: Lake, table: str,
         lake.upsert(batch_df, table, ingest_date, run_ts, keys,
                     delete_col=delete_col)
 
-    writer = (
-        stream_df.writeStream
-        .foreachBatch(write_batch)
-        .option("checkpointLocation",
-                checkpoint_dir or tempfile.mkdtemp(prefix="dlps_ckpt_"))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream_df.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())

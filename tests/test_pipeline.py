@@ -277,6 +277,7 @@ def test_lake_write_does_not_mutate_session_conf(spark, tmp_path):
     from datalake_project_spark.lake import Lake
 
     key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
     spark.conf.set(key, "static")
     try:
         lake = Lake(spark, str(tmp_path / "lake"))
@@ -288,4 +289,4 @@ def test_lake_write_does_not_mutate_session_conf(spark, tmp_path):
         lake.write_usage(df, "t", "2024-01-02", "20240102T000000")
         assert lake.read_usage("t").count() == 10
     finally:
-        spark.conf.unset(key)
+        spark.conf.set(key, prev)

@@ -247,13 +247,14 @@ def test_batch_sessionize_deterministic_on_ts_ties(spark, tmp_path):
             "user_id", "session_id", "n_events", "session_value").collect())
     assert got == [(7, 1, 1, 1.0), (7, 2, 2, 6.0)]
     # re-run with a different shuffle width: identical assignment
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
         got2 = sorted(
             tuple(r) for r in fn(spark, str(tmp_path)).select(
                 "user_id", "session_id", "n_events", "session_value").collect())
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert got2 == got
 
 
