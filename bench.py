@@ -347,6 +347,15 @@ ADDITIONS = [
 
 HEADLINE = CORE + ADDITIONS
 
+# Contention re-run: a query whose every trial was captured with steal%
+# above RERUN_STEAL (the primary trigger: it measures ambient theft and is
+# immune to the bench's own bursts) or 1-min loadavg above RERUN_LOAD (the
+# backup, above typical self-load) gets one extra trial, at most RERUN_MAX
+# re-runs per capture.
+RERUN_STEAL = 15.0
+RERUN_LOAD = 10.0
+RERUN_MAX = 60
+
 
 def _settle_load(threshold: float = 2.0, max_wait_s: float = 120.0,
                  poll_s: float = 5.0) -> dict:
@@ -430,12 +439,7 @@ def main() -> None:
     # sweep alike), so a contended reading is decidable from the file
     # alone, and any query whose EVERY trial was captured above the
     # threshold gets one extra trial (min-of-trials discipline unchanged).
-    # steal%% is the primary re-run trigger (it measures ambient theft
-    # directly and is immune to the bench's own 32-core bursts);
-    # loadavg backs it up at a threshold above typical self-load
-    rerun_load = float(os.environ.get("SPARK_GRAFT_BENCH_RERUN_LOAD", "10.0"))
-    rerun_steal = float(os.environ.get("SPARK_GRAFT_BENCH_RERUN_STEAL", "15.0"))
-    rerun_max = int(os.environ.get("SPARK_GRAFT_BENCH_RERUN_MAX", "60"))
+    # (thresholds: RERUN_STEAL, RERUN_LOAD, at most RERUN_MAX re-runs)
     load_start = os.getloadavg()[0]
     trials: dict[str, list[float]] = {name: [] for name in CORE}
     trial_load: dict[str, list[float]] = {name: [] for name in CORE}
@@ -454,7 +458,7 @@ def main() -> None:
         return dt
 
     def contended(load: float, steal: float) -> bool:
-        return load > rerun_load or steal > rerun_steal
+        return load > RERUN_LOAD or steal > RERUN_STEAL
 
     for t in range(n_trials):
         for name in CORE:
@@ -506,7 +510,7 @@ def main() -> None:
         tail_load[name] = round(os.getloadavg()[0], 2)
         tail_steal[name] = last_steal[0]
 
-    reruns_left = rerun_max
+    reruns_left = RERUN_MAX
     for name in ADDITIONS:
         if contended(tail_load[name], tail_steal[name]) and reruns_left > 0:
             reruns_left -= 1

@@ -21,23 +21,13 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def asof_join(left: DataFrame, right: DataFrame, on: list[str],
-              left_ts: str, right_ts: str,
-              right_cols: list[str] | None = None,
-              suffix: str = "_right",
-              tolerance_seconds: float | None = None) -> DataFrame:
-    """For each left row, attach the latest right row with
-    ``right.ts <= left.ts`` within the same ``on`` group (backward as-of,
-    inclusive). Right columns come back suffixed; unmatched -> NULL.
-
-    NULL timestamps: pandas ``merge_asof`` (the stated contract)
-    rejects NaT keys outright; a distributed plan can't raise per-row,
-    so the defined semantics here are the closest total extension —
-    a NULL-ts RIGHT row never matches anything (dropped before the
-    union), and a NULL-ts LEFT row is kept in the output with a NULL
-    match. Without this guard a null ts sorts FIRST in the window
-    ordering and silently produces an arbitrary match.
-    """
+def _tagged_union(left: DataFrame, right: DataFrame, on: list[str],
+                  left_ts: str, right_ts: str,
+                  right_cols: list[str] | None) -> tuple[DataFrame, list[str]]:
+    """(u, right_cols): left rows (``_lrow``, ``_is_left`` 1) and right rows
+    (``_rrow``, ``_is_left`` 0) in one stream keyed by ``on`` and ``_ts``.
+    NULL-ts right rows are dropped: they never match. ``right_cols``
+    defaults to every non-key right column and always holds ``right_ts``."""
     right_cols = right_cols or [c for c in right.columns if c not in on]
     if right_ts not in right_cols:
         right_cols = [right_ts, *right_cols]
@@ -55,8 +45,37 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
         F.lit(0).alias("_is_left"),
         F.struct(*[F.col(c) for c in right_cols]).alias("_rrow"),
     )
+    return r_tagged.unionByName(l_tagged, allowMissingColumns=True), right_cols
 
-    u = r_tagged.unionByName(l_tagged, allowMissingColumns=True)
+
+def _unpack(matched: DataFrame, left: DataFrame, right_cols: list[str],
+            suffix: str) -> DataFrame:
+    """Each left row's own columns, then its ``_match`` right columns
+    suffixed."""
+    out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
+    out_cols += [F.col(f"_match.{c}").alias(f"{c}{suffix}") for c in right_cols]
+    return matched.select(*out_cols)
+
+
+def asof_join(left: DataFrame, right: DataFrame, on: list[str],
+              left_ts: str, right_ts: str,
+              right_cols: list[str] | None = None,
+              suffix: str = "_right",
+              tolerance_seconds: float | None = None) -> DataFrame:
+    """For each left row, attach the latest right row with
+    ``right.ts <= left.ts`` within the same ``on`` group (backward as-of,
+    inclusive). Right columns come back suffixed; unmatched -> NULL.
+
+    NULL timestamps: pandas ``merge_asof`` (the stated contract)
+    rejects NaT keys outright; a distributed plan can't raise per-row,
+    so the defined semantics here are the closest total extension —
+    a NULL-ts RIGHT row never matches anything (dropped before the
+    union), and a NULL-ts LEFT row is kept in the output with a NULL
+    match. Without this guard a null ts sorts FIRST in the window
+    ordering and silently produces an arbitrary match.
+    """
+    u, right_cols = _tagged_union(left, right, on, left_ts, right_ts,
+                                  right_cols)
     # Right rows sort before left rows at equal _ts (=> inclusive match).
     w = (Window.partitionBy(*on).orderBy("_ts", "_is_left")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -72,9 +91,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
         )
         matched = matched.withColumn("_match", F.when(in_tol, F.col("_match")))
 
-    out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
-    out_cols += [F.col(f"_match.{c}").alias(f"{c}{suffix}") for c in right_cols]
-    return matched.select(*out_cols)
+    return _unpack(matched, left, right_cols, suffix)
 
 
 def asof_join_nearest(left: DataFrame, right: DataFrame, on: list[str],
@@ -103,23 +120,11 @@ def asof_join_nearest(left: DataFrame, right: DataFrame, on: list[str],
     the union); NULL-ts left rows are kept with a NULL match — the
     deterministic total extension of merge_asof's reject-NaT contract.
     """
-    right_cols = right_cols or [c for c in right.columns if c not in on]
-    if right_ts not in right_cols:
-        right_cols = [right_ts, *right_cols]
-    # NULL-ts guard (same contract as asof_join): merge_asof rejects
-    # NaT keys; here a NULL-ts right row is dropped (never a match) and
-    # a NULL-ts left row yields a NULL match — without this, a null ts
+    # NULL-ts guard (same contract as asof_join): without it a null ts
     # sorts FIRST in both window orderings and the forward window hands
     # such a left row an arbitrary first-right-row match.
-    right = right.where(F.col(right_ts).isNotNull())
-
-    l_tagged = left.select(
-        *on, F.col(left_ts).alias("_ts"), F.lit(1).alias("_is_left"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("_lrow"))
-    r_tagged = right.select(
-        *on, F.col(right_ts).alias("_ts"), F.lit(0).alias("_is_left"),
-        F.struct(*[F.col(c) for c in right_cols]).alias("_rrow"))
-    u = r_tagged.unionByName(l_tagged, allowMissingColumns=True)
+    u, right_cols = _tagged_union(left, right, on, left_ts, right_ts,
+                                  right_cols)
 
     # backward: right rows sort BEFORE left at equal _ts -> inclusive
     wb = (Window.partitionBy(*on).orderBy("_ts", "_is_left")
@@ -153,10 +158,7 @@ def asof_join_nearest(left: DataFrame, right: DataFrame, on: list[str],
         matched = matched.withColumn("_match",
                                      F.when(in_tol, F.col("_match")))
 
-    out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
-    out_cols += [F.col(f"_match.{c}").alias(f"{c}{suffix}")
-                 for c in right_cols]
-    return matched.select(*out_cols)
+    return _unpack(matched, left, right_cols, suffix)
 
 
 def range_join(left: DataFrame, right: DataFrame, condition: Column,

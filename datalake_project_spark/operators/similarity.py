@@ -26,6 +26,18 @@ from datalake_project_spark.functions.vectors import (
 )
 
 
+def _rank_by_cosine(cands: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos_sim): the ``k`` candidates of each
+    query with the highest cosine(_qv, _cv), ties to the lower id."""
+    scored = cands.withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
+    )
+
+
 def cosine_topk(queries: DataFrame, candidates: DataFrame, k: int = 5,
                 query_id: str = "vec_id", cand_id: str = "vec_id",
                 vec_col: str = "embedding", exclude_self: bool = True) -> DataFrame:
@@ -38,13 +50,7 @@ def cosine_topk(queries: DataFrame, candidates: DataFrame, k: int = 5,
     joined = c.crossJoin(F.broadcast(q))
     if exclude_self:
         joined = joined.where(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    return _rank_by_cosine(joined, k)
 
 
 def cosine_range(queries: DataFrame, candidates: DataFrame,
@@ -307,13 +313,7 @@ def cosine_topk_lsh(queries: DataFrame, candidates: DataFrame, k: int = 5,
     qv = queries.select(F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv"))
     cv = candidates.select(F.col(cand_id).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
     cands = pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-    scored = cands.withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    return _rank_by_cosine(cands, k)
 
 
 def _l2_normalized(df: DataFrame, idc: str, out_id: str, out_vec: str,
@@ -373,6 +373,41 @@ def build_ivf_index(candidates: DataFrame, index_path: str,
     centroids.coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
 
 
+def _nearest_cells(queries: DataFrame, centroids: DataFrame, query_id: str,
+                   vec_col: str, n_probe: int) -> DataFrame:
+    """(query_id, _qv, cell, ...): each L2-normalized query beside its
+    ``n_probe`` nearest (cell, _centroid) rows, ties to the lower cell."""
+    q_n = _l2_normalized(queries, query_id, "query_id", "_qv", vec_col)
+    qd = (q_n.crossJoin(F.broadcast(centroids))
+          .withColumn("_dist", F.sqrt(F.aggregate(
+              F.zip_with("_qv", "_centroid", lambda a, b: (a - b) * (a - b)),
+              F.lit(0.0), lambda acc, x: acc + x))))
+    wp = Window.partitionBy("query_id").orderBy(F.asc("_dist"), F.asc("cell"))
+    return (qd.withColumn("_pr", F.row_number().over(wp))
+            .where(F.col("_pr") <= n_probe))
+
+
+def _top_k_candidates(cands: DataFrame, k: int,
+                      exclude_self: bool) -> DataFrame:
+    """Exact top-k of (query_id, _qv, neighbor_id, _cv) candidate rows:
+    vectors are unit-norm, so cosine == dot; a pair reached through
+    several cells counts once."""
+    if exclude_self:
+        cands = cands.where(F.col("query_id") != F.col("neighbor_id"))
+    scored = cands.withColumn(
+        "cos_sim",
+        F.aggregate(F.zip_with("_qv", "_cv", lambda a, b: a * b),
+                    F.lit(0.0), lambda acc, x: acc + x))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        scored.groupBy("query_id", "neighbor_id")
+        .agg(F.max("cos_sim").alias("cos_sim"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
+    )
+
+
 def ivf_probe(queries: DataFrame, index_path: str, k: int = 5,
               query_id: str = "vec_id", vec_col: str = "embedding",
               n_probe: int = 4, exclude_self: bool = True) -> DataFrame:
@@ -384,14 +419,7 @@ def ivf_probe(queries: DataFrame, index_path: str, k: int = 5,
     spark = queries.sparkSession
     centroids = spark.read.parquet(f"{index_path}/centroids")
 
-    q_n = _l2_normalized(queries, query_id, "query_id", "_qv", vec_col)
-    qd = (q_n.crossJoin(F.broadcast(centroids))
-          .withColumn("_dist", F.sqrt(F.aggregate(
-              F.zip_with("_qv", "_centroid", lambda a, b: (a - b) * (a - b)),
-              F.lit(0.0), lambda acc, x: acc + x))))
-    wp = Window.partitionBy("query_id").orderBy(F.asc("_dist"), F.asc("cell"))
-    probes = (qd.withColumn("_pr", F.row_number().over(wp))
-              .where(F.col("_pr") <= n_probe)
+    probes = (_nearest_cells(queries, centroids, query_id, vec_col, n_probe)
               .select("query_id", "_qv", "cell"))
 
     # the probe cell set is tiny (n_queries x n_probe); pushing it as an
@@ -402,20 +430,7 @@ def ivf_probe(queries: DataFrame, index_path: str, k: int = 5,
              .where(F.col("cell").isin(probe_cells)))
 
     cands = probes.join(cells, "cell")
-    if exclude_self:
-        cands = cands.where(F.col("query_id") != F.col("neighbor_id"))
-    scored = cands.withColumn(
-        "cos_sim",
-        F.aggregate(F.zip_with("_qv", "_cv", lambda a, b: a * b),
-                    F.lit(0.0), lambda acc, x: acc + x))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))  # same pair via multiple cells
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    return _top_k_candidates(cands, k, exclude_self)
 
 
 def cosine_topk_ivf(queries: DataFrame, candidates: DataFrame, k: int = 5,
@@ -448,32 +463,11 @@ def cosine_topk_ivf(queries: DataFrame, candidates: DataFrame, k: int = 5,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell int, _centroid array<double>")
 
-    q_n = _l2_normalized(queries, query_id, "query_id", "_qv", vec_col)
-    qd = (q_n.crossJoin(F.broadcast(centroids))
-          .withColumn("_dist", F.sqrt(F.aggregate(
-              F.zip_with("_qv", "_centroid", lambda a, b: (a - b) * (a - b)),
-              F.lit(0.0), lambda acc, x: acc + x))))
-    wp = Window.partitionBy("query_id").orderBy(F.asc("_dist"), F.asc("cell"))
-    probes = (qd.withColumn("_pr", F.row_number().over(wp))
-              .where(F.col("_pr") <= n_probe)
+    probes = (_nearest_cells(queries, centroids, query_id, vec_col, n_probe)
               .select("query_id", "_qv", F.col("cell").alias("_cell")))
 
     cands = probes.join(cells, "_cell")
-    if exclude_self:
-        cands = cands.where(F.col("query_id") != F.col("neighbor_id"))
-    # vectors are unit-norm: cosine == dot
-    scored = cands.withColumn(
-        "cos_sim",
-        F.aggregate(F.zip_with("_qv", "_cv", lambda a, b: a * b),
-                    F.lit(0.0), lambda acc, x: acc + x))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))  # same pair via multiple cells
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    return _top_k_candidates(cands, k, exclude_self)
 
 
 def block_pairwise_cosine(emb: DataFrame, id_col: str = "vec_id",

@@ -18,16 +18,61 @@ from datalake_project_spark.operators.diff import snapshot_diff
 from datalake_project_spark.queries import local_df, register
 
 
+def _in_year(year: int):
+    """Predicate: ``o_orderdate`` falls in calendar ``year``."""
+    return ((F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp")))
+
+
+def _order_snapshot(o: DataFrame, year: int) -> DataFrame:
+    """(o_orderkey, o_totalprice) of ``year``'s orders: the table the lake
+    round-trip queries write as one snapshot."""
+    return o.where(_in_year(year)).select("o_orderkey", "o_totalprice")
+
+
+def _customer_rollup(o: DataFrame, year: int) -> DataFrame:
+    """(custkey, order_count, total_price) of ``year``'s orders."""
+    return (o.where(_in_year(year))
+            .groupBy(F.col("o_custkey").alias("custkey"))
+            .agg(F.count("*").alias("order_count"),
+                 F.round(F.sum("o_totalprice"), 2).alias("total_price")))
+
+
+def _price_rollup(o: DataFrame, year: int) -> DataFrame:
+    """(custkey, total_price) of ``year``'s orders, price rounded at 2 dp."""
+    return (o.where(_in_year(year))
+            .groupBy(F.col("o_custkey").alias("custkey"))
+            .agg(F.round(F.sum("o_totalprice"), 2).alias("total_price")))
+
+
+def _customer_years(o: DataFrame) -> DataFrame:
+    """(yr, custkey): each year before 1999 a customer placed an order
+    in, the snapshot series the SCD queries diff and interval."""
+    return (o.where(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
+            .select(F.year("o_orderdate").alias("yr"),
+                    F.col("o_custkey").alias("custkey"))
+            .distinct())
+
+
+def _tenure_intervals(snaps: DataFrame) -> DataFrame:
+    """(custkey, island, valid_from, valid_to): each run of consecutive
+    years in ``snaps`` (yr, custkey), by gaps-and-islands (start flag ->
+    running island id -> min/max per island) on ONE key shuffle."""
+    w = Window.partitionBy("custkey").orderBy("yr")
+    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    flagged = snaps.withColumn(
+        "is_start",
+        F.when(F.lag("yr").over(w).isNull()
+               | (F.lag("yr").over(w) != F.col("yr") - 1), 1).otherwise(0))
+    islands = flagged.withColumn("island", F.sum("is_start").over(cum))
+    return (islands.groupBy("custkey", "island")
+            .agg(F.min("yr").alias("valid_from"),
+                 F.max("yr").alias("valid_to")))
+
+
 def _active_custkeys(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     o = Catalog(spark, sf_dir).table("orders")
-    return (
-        o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-        )
-        .select(F.col("o_custkey").alias("custkey"))
-        .distinct()
-    )
+    return o.where(_in_year(year)).select(F.col("o_custkey").alias("custkey")).distinct()
 
 
 @register(
@@ -131,17 +176,7 @@ def q_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.lake import Lake
 
     o = Catalog(spark, sf_dir).table("orders")
-    snap = (
-        o.where(
-            (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
-        )
-        .groupBy(F.col("o_custkey").alias("custkey"))
-        .agg(
-            F.count("*").alias("order_count"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
+    snap = _customer_rollup(o, 1995)
     from datalake_project_spark.scratch import scratch_dir
 
     lake = Lake(spark, scratch_dir("roundtrip", sf_dir))
@@ -176,10 +211,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.lake import Lake
 
     o = Catalog(spark, sf_dir).table("orders")
-    snap = o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_totalprice").repartition(4)
+    snap = _order_snapshot(o, 1997).repartition(4)
     from datalake_project_spark.scratch import scratch_dir
 
     lake = Lake(spark, scratch_dir("compact", sf_dir))
@@ -223,12 +255,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_snapshot_series_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.operators.diff import snapshot_diff_windowed
-    o = Catalog(spark, sf_dir).table("orders")
-    snaps = (
-        o.where(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-        .select(F.year("o_orderdate").alias("yr"), F.col("o_custkey").alias("custkey"))
-        .distinct()
-    )
+    snaps = _customer_years(Catalog(spark, sf_dir).table("orders"))
     return snapshot_diff_windowed(snaps, keys=["custkey"], ts_col="yr") \
         .select("custkey", "snapshot_ts", "change")
 
@@ -269,27 +296,11 @@ def q_snapshot_series_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "MERGEs with a single windowed pass over the series.",
 )
 def q_snapshot_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    o = Catalog(spark, sf_dir).table("orders")
-    snaps = (
-        o.where(F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-        .select(F.year("o_orderdate").alias("yr"), F.col("o_custkey").alias("custkey"))
-        .distinct()
-    )
+    snaps = _customer_years(Catalog(spark, sf_dir).table("orders"))
     # latest snapshot year as a broadcast 1-row aggregate — one DAG, no
     # driver-side action during construction
     last = snaps.agg(F.max("yr").alias("last_yr"))
-    w = Window.partitionBy("custkey").orderBy("yr")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = snaps.withColumn(
-        "is_start",
-        F.when(F.lag("yr").over(w).isNull()
-               | (F.lag("yr").over(w) != F.col("yr") - 1), 1).otherwise(0))
-    islands = flagged.withColumn("island", F.sum("is_start").over(cum))
-    return (islands.groupBy("custkey", "island")
-            .agg(F.min("yr").alias("valid_from"),
-                 F.max("yr").alias("valid_to"))
+    return (_tenure_intervals(snaps)
             .crossJoin(F.broadcast(last))
             .select("custkey", "island", "valid_from", "valid_to",
                     (F.col("valid_to") == F.col("last_yr")).alias("is_current")))
@@ -483,16 +494,7 @@ def q_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     snaps = (o.select(F.year("o_orderdate").alias("yr"),
                       F.col("o_custkey").alias("custkey"))
              .distinct())
-    w = Window.partitionBy("custkey").orderBy("yr")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    flagged = snaps.withColumn(
-        "is_start",
-        F.when(F.lag("yr").over(w).isNull()
-               | (F.lag("yr").over(w) != F.col("yr") - 1), 1).otherwise(0))
-    islands = flagged.withColumn("island", F.sum("is_start").over(cum))
-    dim = (islands.groupBy("custkey", "island")
-           .agg(F.min("yr").alias("valid_from"), F.max("yr").alias("valid_to"))
-           .drop("island"))
+    dim = _tenure_intervals(snaps).drop("island")
     fact = o.select("o_orderkey", F.col("o_custkey").alias("custkey"),
                     F.year("o_orderdate").alias("yr"))
     joined = range_join(
@@ -532,10 +534,7 @@ def q_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.scratch import scratch_dir
 
     o = Catalog(spark, sf_dir).table("orders")
-    snap = o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_totalprice")
+    snap = _order_snapshot(o, 1997)
 
     lake = Lake(spark, scratch_dir("retention", sf_dir))
     runs = ["19970101T060000", "19970101T120000", "19970101T180000"]
@@ -622,10 +621,7 @@ def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.scratch import scratch_dir
 
     o = Catalog(spark, sf_dir).table("orders")
-    snap = o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("o_orderkey", "o_totalprice")
+    snap = _order_snapshot(o, 1997)
 
     lake = Lake(spark, scratch_dir("asof", sf_dir))
     for ts in ("19970101T060000", "19970101T120000", "19970101T180000"):
@@ -638,6 +634,31 @@ def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     return local_df(spark, 
         [(resolved, agg["n"], float(agg["t"]))],
         "resolved_run string, n_rows long, total_price double")
+
+
+def _merge_batch(spark: SparkSession,
+                 sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(base, updates) of the MERGE triple: the 1995 per-customer rollup
+    (custkey, order_count, total_price) and the upsert batch, the 1996
+    rollup plus an is_deleted tombstone for each customer active in 1995,
+    inactive in 1996, with a negative balance."""
+    cat = Catalog(spark, sf_dir)
+    o = cat.table("orders")
+    c = cat.table("customer")
+
+    base, cur = _customer_rollup(o, 1995), _customer_rollup(o, 1996)
+    churn = (
+        base.select("custkey")
+        .join(cur.select("custkey"), "custkey", "left_anti")
+        .join(c.where(F.col("c_acctbal") < 0)
+               .select(F.col("c_custkey").alias("custkey")),
+              "custkey", "left_semi")
+        .withColumn("order_count", F.lit(None).cast("long"))
+        .withColumn("total_price", F.lit(None).cast("double"))
+        .withColumn("is_deleted", F.lit(True))
+    )
+    updates = cur.withColumn("is_deleted", F.lit(False)).unionByName(churn)
+    return base, updates
 
 
 @register(
@@ -686,34 +707,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.lake import Lake
     from datalake_project_spark.scratch import scratch_dir
 
-    cat = Catalog(spark, sf_dir)
-    o = cat.table("orders")
-    c = cat.table("customer")
-
-    def rollup(year: int) -> DataFrame:
-        return (
-            o.where(
-                (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-            )
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.count("*").alias("order_count"),
-                 F.round(F.sum("o_totalprice"), 2).alias("total_price"))
-        )
-
-    base, cur = rollup(1995), rollup(1996)
-    # tombstones: active in 1995, inactive in 1996, negative balance
-    churn = (
-        base.select("custkey")
-        .join(cur.select("custkey"), "custkey", "left_anti")
-        .join(c.where(F.col("c_acctbal") < 0)
-               .select(F.col("c_custkey").alias("custkey")),
-              "custkey", "left_semi")
-        .withColumn("order_count", F.lit(None).cast("long"))
-        .withColumn("total_price", F.lit(None).cast("double"))
-        .withColumn("is_deleted", F.lit(True))
-    )
-    updates = cur.withColumn("is_deleted", F.lit(False)).unionByName(churn)
+    base, updates = _merge_batch(spark, sf_dir)
 
     lake = Lake(spark, scratch_dir("merge", sf_dir))
     lake.write_usage(base, "cust_merge", "1995-01-01", "19950101T000000")
@@ -767,33 +761,7 @@ def q_manifest_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.manifest_lake import ManifestLake
     from datalake_project_spark.scratch import scratch_dir
 
-    cat = Catalog(spark, sf_dir)
-    o = cat.table("orders")
-    c = cat.table("customer")
-
-    def rollup(year: int) -> DataFrame:
-        return (
-            o.where(
-                (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-            )
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.count("*").alias("order_count"),
-                 F.round(F.sum("o_totalprice"), 2).alias("total_price"))
-        )
-
-    base, cur = rollup(1995), rollup(1996)
-    churn = (
-        base.select("custkey")
-        .join(cur.select("custkey"), "custkey", "left_anti")
-        .join(c.where(F.col("c_acctbal") < 0)
-               .select(F.col("c_custkey").alias("custkey")),
-              "custkey", "left_semi")
-        .withColumn("order_count", F.lit(None).cast("long"))
-        .withColumn("total_price", F.lit(None).cast("double"))
-        .withColumn("is_deleted", F.lit(True))
-    )
-    updates = cur.withColumn("is_deleted", F.lit(False)).unionByName(churn)
+    base, updates = _merge_batch(spark, sf_dir)
 
     lake = ManifestLake(spark, scratch_dir("mlake", sf_dir))
     lake.write_usage(base, "cust_merge", "1995-01-01", "19950101T000000")
@@ -837,16 +805,10 @@ def q_manifest_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = Catalog(spark, sf_dir).table("orders")
 
-    def snap(year: int) -> DataFrame:
-        return o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-        ).select("o_orderkey", "o_totalprice")
-
     lake = ManifestLake(spark, scratch_dir("mlake", sf_dir))
-    v_base = lake.write_usage(snap(1995), "orders_tt",
+    v_base = lake.write_usage(_order_snapshot(o, 1995), "orders_tt",
                               "1995-01-01", "19950101T000000")
-    lake.write_usage(snap(1996), "orders_tt",
+    lake.write_usage(_order_snapshot(o, 1996), "orders_tt",
                      "1995-01-01", "19950101T000000")
 
     def agg(df: DataFrame, tag: str) -> DataFrame:
@@ -894,10 +856,7 @@ def q_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = Catalog(spark, sf_dir).table("orders")
     snap = (
-        o.where(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-        )
+        o.where(_in_year(1996))
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_orders"),
              F.round(F.sum("o_totalprice"), 2).alias("total_price"))
@@ -953,17 +912,12 @@ def q_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = Catalog(spark, sf_dir).table("orders")
 
-    def snap(year: int) -> DataFrame:
-        return o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-        ).select("o_orderkey", "o_totalprice")
-
     lake = Lake(spark, scratch_dir("rollback", sf_dir))
     runs = {1997: "19970101T000000", 1998: "19980101T000000",
             1999: "19990101T000000"}
     for yr, run in runs.items():
-        lake.write_usage(snap(yr), "orders_snap", "2000-01-01", run)
+        lake.write_usage(_order_snapshot(o, yr), "orders_snap", "2000-01-01",
+                         run)
     lake.rollback("orders_snap", "2000-01-01",
                   to_run=runs[1998], new_run="20000101T000000")
 
@@ -1105,11 +1059,7 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def actives(year: int) -> DataFrame:
         return (c.join(o, o.o_custkey == c.c_custkey)
-                .where((F.col("o_orderdate")
-                        >= F.lit(f"{year}-01-01").cast("timestamp"))
-                       & (F.col("o_orderdate")
-                          < F.lit(f"{year + 1}-01-01").cast("timestamp"))
-                       & F.col("c_mktsegment").isin(*segs))
+                .where(_in_year(year) & F.col("c_mktsegment").isin(*segs))
                 .select("c_custkey", "c_name", "c_mktsegment").distinct())
 
     def payloads(year: int) -> dict:
@@ -1188,12 +1138,7 @@ def q_replica_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_project_spark.scratch import scratch_dir
 
     o = Catalog(spark, sf_dir).table("orders")
-    truth = (o.where(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")))
-        .groupBy(F.col("o_custkey").alias("custkey"))
-        .agg(F.count("*").alias("order_count"),
-             F.round(F.sum("o_totalprice"), 2).alias("total_price")))
+    truth = _customer_rollup(o, 1997)
 
     lake = Lake(spark, scratch_dir("repair", sf_dir))
     # corrupted replica: %7 keys dropped, %11 keys stale (+1.00)
@@ -1270,10 +1215,7 @@ def q_lake_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = Catalog(spark, sf_dir)
     o = cat.table("orders")
-    snap = (o.where(
-        (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp")))
-        .select("o_orderkey", "o_totalprice"))
+    snap = _order_snapshot(o, 1995)
 
     root = scratch_dir("orphan_lake", sf_dir)
     # Clean slate: this query ASSERTS exact orphan counts, so the
@@ -1742,16 +1684,9 @@ def q_manifest_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = Catalog(spark, sf_dir).table("orders")
 
-    def rollup(year: int) -> DataFrame:
-        return (o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp")))
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.round(F.sum("o_totalprice"), 2).alias("total_price")))
-
     lake = ManifestLake(spark, scratch_dir("mlake", sf_dir))
-    v1 = lake.write_usage(rollup(1995), "vdiff", "1995-01-01", "T01")
-    v2 = lake.write_usage(rollup(1996), "vdiff", "1995-01-01", "T01")
+    v1 = lake.write_usage(_price_rollup(o, 1995), "vdiff", "1995-01-01", "T01")
+    v2 = lake.write_usage(_price_rollup(o, 1996), "vdiff", "1995-01-01", "T01")
     old = (lake.read_usage_at("vdiff", v1, "1995-01-01", "T01")
            .select("custkey", "total_price"))
     new = (lake.read_usage_at("vdiff", v2, "1995-01-01", "T01")
@@ -1859,17 +1794,10 @@ def q_cdc_apply_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_snapshot_scd3(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).table("orders")
 
-    def rollup(year: int) -> DataFrame:
-        return (o.where(
-            (F.col("o_orderdate") >= F.lit(f"{year}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{year + 1}-01-01").cast("timestamp")))
-            .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.round(F.sum("o_totalprice"), 2).alias("total_price")))
-
-    t95 = rollup(1995).select("custkey",
-                              F.col("total_price").alias("prev_p"))
-    t96 = rollup(1996).select("custkey",
-                              F.col("total_price").alias("cur_p"))
+    t95 = _price_rollup(o, 1995).select("custkey",
+                                        F.col("total_price").alias("prev_p"))
+    t96 = _price_rollup(o, 1996).select("custkey",
+                                        F.col("total_price").alias("cur_p"))
     j = t95.join(t96, "custkey", "full_outer")
     change = (F.when(F.col("prev_p").isNull(), "new")
               .when(F.col("cur_p").isNull(), "lapsed")
@@ -2167,11 +2095,7 @@ def q_cdc_update_column_profile(spark: SparkSession,
     month = F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM")
 
     def snap(year: int) -> DataFrame:
-        return (o.where(
-                    (F.col("o_orderdate")
-                     >= F.lit(f"{year}-01-01").cast("timestamp"))
-                    & (F.col("o_orderdate")
-                       < F.lit(f"{year + 1}-01-01").cast("timestamp")))
+        return (o.where(_in_year(year))
                 .groupBy(F.col("o_custkey").alias("custkey"))
                 .agg(F.count(F.lit(1)).alias("n_orders"),
                      F.countDistinct(month).alias("n_months"),
@@ -2236,10 +2160,8 @@ def q_lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
     ml = ManifestLake(spark, root)
     o = Catalog(spark, sf_dir).table("orders")
-    snap = (o.where(
-        (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp")))
-        .select("o_orderkey", "o_custkey", "o_totalprice"))
+    snap = (o.where(_in_year(1995))
+            .select("o_orderkey", "o_custkey", "o_totalprice"))
     ml.write_usage(snap, "src", "20240101", "r1")
 
     def listing() -> set:

@@ -45,6 +45,29 @@ _PAIRS_ORACLE = """
 _PAIR_EXPANSION = 48
 
 
+def _pair_width(spark: SparkSession, sf_dir: str,
+                target_bytes: int | None = None) -> int:
+    """Width of a shingle-pair exchange over ``sf_dir``'s documents."""
+    return tuning.width(
+        spark, "jvm_shuffle",
+        _PAIR_EXPANSION * tuning.dir_bytes(f"{sf_dir}/documents.parquet"),
+        target_bytes=target_bytes)
+
+
+def _near_dup_pairs(docs: DataFrame, sf_dir: str) -> DataFrame:
+    """Near-duplicate pairs (shingle Jaccard >= 0.5) among ``docs``, the
+    pair exchanges sized from the fixture's documents footprint."""
+    return D.ngram_jaccard_pairs(
+        docs, threshold=0.5,
+        num_partitions=_pair_width(docs.sparkSession, sf_dir))
+
+
+def _near_dup_clusters(docs: DataFrame, sf_dir: str) -> DataFrame:
+    """(id, rep): each near-duplicate cluster of ``docs`` labelled by its
+    minimum doc id; documents without a near duplicate are absent."""
+    return D.connected_components(_near_dup_pairs(docs, sf_dir))
+
+
 @register(
     "q_dedup_exact",
     oracle="""
@@ -97,9 +120,7 @@ def q_dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    return D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
+    return _near_dup_pairs(d, sf_dir)
 
 
 @register(
@@ -265,10 +286,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
-    return D.connected_components(pairs)
+    return _near_dup_clusters(d, sf_dir)
 
 
 @register(
@@ -311,10 +329,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
-    comp = D.connected_components(pairs)
+    comp = _near_dup_clusters(d, sf_dir)
     sizes = comp.groupBy("rep").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (sizes.groupBy("cluster_size")
             .agg(F.count(F.lit(1)).alias("n_clusters"),
@@ -334,10 +349,8 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
     return D.ngram_jaccard_pairs(d, threshold=0.5, max_df=50,
-                                 num_partitions=n_parts)
+                                 num_partitions=_pair_width(spark, sf_dir))
 
 
 @register(
@@ -430,10 +443,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
-    comp = D.connected_components(pairs)
+    comp = _near_dup_clusters(d, sf_dir)
     non_reps = comp.where(F.col("id") != F.col("rep")).select("id")
     return d.join(non_reps, d.doc_id == non_reps.id, "left_anti").select("doc_id")
 
@@ -549,10 +559,7 @@ def q_dedup_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
-    comp = D.connected_components(pairs)
+    comp = _near_dup_clusters(d, sf_dir)
     dropped = comp.where(F.col("id") != F.col("rep")).select("id")
     tagged = d.select("doc_id", "source").join(
         dropped, d.doc_id == dropped.id, "left")
@@ -660,9 +667,7 @@ def q_dedup_dfcap_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
+    pairs = _near_dup_pairs(d, sf_dir)
     cuts = F.array(*[F.lit(t) for t in (0.5, 0.6, 0.7, 0.8, 0.9)])
     exploded = pairs.select("jaccard",
                             F.explode(cuts).alias("threshold"))
@@ -720,9 +725,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_review_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = (D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
+    pairs = (_near_dup_pairs(d, sf_dir)
              .orderBy(F.desc("jaccard"), "a_id", "b_id").limit(10)
              .localCheckpoint(eager=False))
     da = d.select(F.col("doc_id").alias("a_id"),
@@ -860,10 +863,7 @@ def q_dedup_savings_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges — the r8 attribution found the UNSIZED call here was the
     # query's entire 610 MB 30x spill: one 33.8M-row pair-count
     # HashAggregate on AQE-coalesced session width)
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d1, threshold=0.5, num_partitions=n_parts)
-    comp = D.connected_components(pairs)
+    comp = _near_dup_clusters(d1, sf_dir)
     non_reps = comp.where(F.col("id") != F.col("rep")).select("id")
     s2 = s1.join(non_reps, s1.doc_id == non_reps.id, "left_anti")
     d2 = d.join(s2, "doc_id", "left_semi")
@@ -971,10 +971,7 @@ def q_dedup_resolved_by_quality(spark: SparkSession,
     from datalake_project_spark.functions.text import tokens
 
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
-    comp = D.connected_components(pairs)
+    comp = _near_dup_clusters(d, sf_dir)
     ws = tokens(F.col("text"))
     scored = d.select(
         "doc_id",
@@ -1065,10 +1062,7 @@ def q_dedup_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir).table("documents")
     # footprint-sized pair exchanges (r6 ladder: 2.6 GB spill at 10x
     # on the static session width)
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    pairs = D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
-    rep = D.connected_components(pairs)  # (id, rep)
+    rep = _near_dup_clusters(d, sf_dir)  # (id, rep)
     lab = (d.join(rep.withColumnRenamed("id", "doc_id"), "doc_id", "left")
            .select("doc_id",
                    F.coalesce("rep", "doc_id").alias("g"),
@@ -1193,10 +1187,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task's memory slice — the same co-resident-consumer sizing the
     # FS verify arm needed; the r8 receipt measured ~5 MB/task of sort
     # spill at the 64-task width that this deletes.
-    nparts = tuning.width(
-        spark, "jvm_shuffle",
-        _PAIR_EXPANSION * tuning.dir_bytes(f"{sf_dir}/documents.parquet"),
-        target_bytes=8 << 20)
+    nparts = _pair_width(spark, sf_dir, target_bytes=8 << 20)
     sh = D._doc_shingles(d, "doc_id", "text", 3)
     # sz rides the index rows from the source (_shingles is DISTINCT by
     # construction, so |shingle set| = size of the array = COUNT(*) per
@@ -1351,9 +1342,8 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     K, P = 16, 2147483647
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    truth = (D.ngram_jaccard_pairs(d, threshold=0.2, num_partitions=n_parts)
+    truth = (D.ngram_jaccard_pairs(d, threshold=0.2,
+                                   num_partitions=_pair_width(spark, sf_dir))
              .select("a_id", "b_id", "jaccard")
              .localCheckpoint(eager=False))
     ids = (truth.select(F.col("a_id").alias("_id"))
@@ -1475,9 +1465,7 @@ def q_dedup_minhash_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     B, P = 16, 2147483647
     d = Catalog(spark, sf_dir).table("documents")
-    n_parts = tuning.width(spark, "jvm_shuffle", _PAIR_EXPANSION
-                           * tuning.dir_bytes(f"{sf_dir}/documents.parquet"))
-    truth = (D.ngram_jaccard_pairs(d, threshold=0.5, num_partitions=n_parts)
+    truth = (_near_dup_pairs(d, sf_dir)
              .select("a_id", "b_id", "jaccard")
              .localCheckpoint(eager=False))
     ids = (truth.select(F.col("a_id").alias("_id"))
@@ -1597,10 +1585,7 @@ def q_dedup_idf_weighted_jaccard(spark: SparkSession,
     # targets give the 8-partition minimum).
     from pyspark.sql.window import Window
 
-    n_parts = tuning.width(
-        spark, "jvm_shuffle",
-        _PAIR_EXPANSION * tuning.dir_bytes(f"{sf_dir}/documents.parquet"),
-        target_bytes=16 << 20)
+    n_parts = _pair_width(spark, sf_dir, target_bytes=16 << 20)
     wv2 = wv.withColumn("_w", F.sum("_idf").over(
         Window.partitionBy("_id")))
     wvs = wv2.repartition(n_parts, "_s")
@@ -1702,10 +1687,7 @@ def q_dedup_bag_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16 MB x cores (at sf0.1 both targets give the 8-partition minimum).
     from pyspark.sql.window import Window
 
-    n_parts = tuning.width(
-        spark, "jvm_shuffle",
-        _PAIR_EXPANSION * tuning.dir_bytes(f"{sf_dir}/documents.parquet"),
-        target_bytes=16 << 20)
+    n_parts = _pair_width(spark, sf_dir, target_bytes=16 << 20)
     tfk2 = tfk.withColumn("dl", F.sum("tf").over(
         Window.partitionBy("doc_id")))
     tfs = tfk2.repartition(n_parts, "s")

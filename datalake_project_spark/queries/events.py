@@ -371,12 +371,46 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "metadata-sized at any corpus scale.",
 )
 def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (_transitions(spark, sf_dir)
+            .groupBy("prev_type", F.col("event_type").alias("next_type"))
+            .agg(F.count(F.lit(1)).alias("n_transitions")))
+
+
+def _transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every event after a user's first, with ``prev_type``: the type of
+    the same user's previous event in (ts, event_id) order."""
     e = Catalog(spark, sf_dir).table("events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.withColumn("prev_type", F.lag("event_type").over(w))
-    return (seq.where(F.col("prev_type").isNotNull())
-            .groupBy("prev_type", F.col("event_type").alias("next_type"))
-            .agg(F.count(F.lit(1)).alias("n_transitions")))
+    return seq.where(F.col("prev_type").isNotNull())
+
+
+def _transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(s, t, n): how often a type-s event is followed by a type-t event
+    of the same user."""
+    return (_transitions(spark, sf_dir)
+            .groupBy(F.col("prev_type").alias("s"),
+                     F.col("event_type").alias("t"))
+            .agg(F.count(F.lit(1)).alias("n")))
+
+
+def _hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, bucket, n, v): per-type hourly event count and value
+    sum, left-joined onto the dense (type x hour) spine between the first
+    and last event, so empty hours carry NULLs."""
+    e = Catalog(spark, sf_dir).table("events")
+    counts = (e.groupBy("event_type",
+                        F.date_trunc("hour", F.col("ts")).alias("bucket"))
+              .agg(F.count(F.lit(1)).alias("n"),
+                   F.round(F.sum("value"), 2).alias("v")))
+    bounds = e.agg(F.date_trunc("hour", F.min("ts")).alias("lo"),
+                   F.date_trunc("hour", F.max("ts")).alias("hi"))
+    types = e.select("event_type").distinct()
+    spine = (types.crossJoin(F.broadcast(bounds))
+             .select("event_type",
+                     F.explode(F.sequence(
+                         "lo", "hi", F.expr("interval 1 hour"))).alias("bucket")))
+    return spine.join(counts, ["event_type", "bucket"], "left")
 
 
 @register(
@@ -411,20 +445,8 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "only corpus-sized work is the one groupBy.",
 )
 def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    counts = (e.groupBy("event_type",
-                        F.date_trunc("hour", F.col("ts")).alias("bucket"))
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.round(F.sum("value"), 2).alias("v")))
-    bounds = e.agg(F.date_trunc("hour", F.min("ts")).alias("lo"),
-                   F.date_trunc("hour", F.max("ts")).alias("hi"))
-    types = e.select("event_type").distinct()
-    spine = (types.crossJoin(F.broadcast(bounds))
-             .select("event_type",
-                     F.explode(F.sequence(
-                         "lo", "hi", F.expr("interval 1 hour"))).alias("bucket")))
     return (
-        spine.join(counts, ["event_type", "bucket"], "left")
+        _hourly_gapfill(spark, sf_dir)
         .select("event_type",
                 F.date_format("bucket", "yyyy-MM-dd HH:00").alias("bucket_s"),
                 F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_events"),
@@ -489,19 +511,7 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "never the raw events.",
 )
 def q_events_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    counts = (e.groupBy("event_type",
-                        F.date_trunc("hour", F.col("ts")).alias("bucket"))
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.round(F.sum("value"), 2).alias("v")))
-    bounds = e.agg(F.date_trunc("hour", F.min("ts")).alias("lo"),
-                   F.date_trunc("hour", F.max("ts")).alias("hi"))
-    types = e.select("event_type").distinct()
-    spine = (types.crossJoin(F.broadcast(bounds))
-             .select("event_type",
-                     F.explode(F.sequence(
-                         "lo", "hi", F.expr("interval 1 hour"))).alias("bucket")))
-    j = (spine.join(counts, ["event_type", "bucket"], "left")
+    j = (_hourly_gapfill(spark, sf_dir)
          .withColumn("hr", (F.unix_timestamp("bucket") / 3600).cast("long")))
     wb = (Window.partitionBy("event_type").orderBy("hr")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -674,6 +684,15 @@ def q_events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dau.join(wau, "day")
 
 
+def _prev_event_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, ts, prev_ts) for every event after a user's first,
+    prev_ts being the user's previous event in (ts, event_id) order."""
+    e = Catalog(spark, sf_dir).table("events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = e.select("user_id", "ts", F.lag("ts").over(w).alias("prev_ts"))
+    return seq.where(F.col("prev_ts").isNotNull())
+
+
 @register(
     "q_events_interarrival",
     oracle="""
@@ -701,11 +720,8 @@ def q_events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(ts, event_id) total order.",
 )
 def q_events_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select("user_id", "ts", F.lag("ts").over(w).alias("prev_ts"))
     gap_s = F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")
-    gaps = (seq.where(F.col("prev_ts").isNotNull())
+    gaps = (_prev_event_ts(spark, sf_dir)
             .select(F.floor(F.log2(F.greatest(gap_s, F.lit(1)) + 1))
                     .cast("int").alias("gap_bucket")))
     return gaps.groupBy("gap_bucket").agg(F.count(F.lit(1)).alias("n_gaps"))
@@ -801,6 +817,28 @@ def _markov_oracle(n_iter: int) -> str:
     return "".join(parts)
 
 
+def _transition_probs(tc: DataFrame) -> DataFrame:
+    """(s, t, p): the transition matrix, each row of counts normalized."""
+    wn = Window.partitionBy("s")
+    return tc.select("s", "t", (F.col("n").cast("double")
+                                / F.sum("n").over(wn)).alias("p"))
+
+
+def _stationary(tc: DataFrame, tp: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """((st, pr), (k)): the stationary distribution after MARKOV_ITERS
+    power steps from uniform over tc's k source states (rounded at 6 dp
+    per step), and the 1-row state count."""
+    states = tc.select(F.col("s").alias("st")).distinct()
+    ns = states.agg(F.count(F.lit(1)).alias("k"))
+    pr = (states.crossJoin(F.broadcast(ns))
+          .select("st", (F.lit(1.0) / F.col("k")).alias("pr")))
+    for _ in range(MARKOV_ITERS):
+        pr = (tp.join(F.broadcast(pr), tp.s == pr.st)
+              .groupBy(F.col("t").alias("st"))
+              .agg(F.round(F.sum(F.col("pr") * F.col("p")), 6).alias("pr")))
+    return pr, ns
+
+
 @register(
     "q_events_markov_stationary",
     oracle=_markov_oracle(MARKOV_ITERS),
@@ -818,24 +856,9 @@ def _markov_oracle(n_iter: int) -> str:
         "partitions by source state — never a single partition.",
 )
 def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.withColumn("prev_type", F.lag("event_type").over(w))
-    tc = (seq.where(F.col("prev_type").isNotNull())
-          .groupBy(F.col("prev_type").alias("s"),
-                   F.col("event_type").alias("t"))
-          .agg(F.count(F.lit(1)).alias("n")))
-    wn = Window.partitionBy("s")
-    tp = tc.select("s", "t", (F.col("n").cast("double")
-                              / F.sum("n").over(wn)).alias("p"))
-    states = tc.select(F.col("s").alias("st")).distinct()
-    ns = states.agg(F.count(F.lit(1)).alias("k"))
-    pr = (states.crossJoin(F.broadcast(ns))
-          .select("st", (F.lit(1.0) / F.col("k")).alias("pr")))
-    for _ in range(MARKOV_ITERS):
-        pr = (tp.join(F.broadcast(pr), tp.s == pr.st)
-              .groupBy(F.col("t").alias("st"))
-              .agg(F.round(F.sum(F.col("pr") * F.col("p")), 6).alias("pr")))
+    tc = _transition_counts(spark, sf_dir)
+    tp = _transition_probs(tc)
+    pr, _ = _stationary(tc, tp)
     return pr.select(F.col("st").alias("event_type"),
                      (F.round("pr", 4) + F.lit(0.0)).alias("stationary_p"))
 
@@ -1167,13 +1190,7 @@ def q_events_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_events_markov_baseline_accuracy(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.withColumn("prev_type", F.lag("event_type").over(w))
-    tc = (seq.where(F.col("prev_type").isNotNull())
-          .groupBy(F.col("prev_type").alias("s"),
-                   F.col("event_type").alias("t"))
-          .agg(F.count(F.lit(1)).alias("n")))
+    tc = _transition_counts(spark, sf_dir)
     # argmax with count-desc, type-asc tie-break: max count per source
     # first, then the lexicographically smallest type at that count
     # (max-of-struct can't express a descending string tie-break)
@@ -1752,11 +1769,8 @@ def q_hll_mergeable_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "— hash-exact.",
 )
 def q_events_reactivation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select("user_id", "ts", F.lag("ts").over(w).alias("prev_ts"))
     gap_s = F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")
-    gaps = (seq.where(F.col("prev_ts").isNotNull())
+    gaps = (_prev_event_ts(spark, sf_dir)
             .groupBy("user_id")
             .agg(F.count(F.when(gap_s > 7 * 86400, 1))
                  .alias("n_reactivations")))
@@ -2965,26 +2979,9 @@ def q_events_markov_entropy_rate(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     import math
 
-    e = Catalog(spark, sf_dir).table("events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.withColumn("prev_type", F.lag("event_type").over(w))
-    tc = (seq.where(F.col("prev_type").isNotNull())
-          .groupBy(F.col("prev_type").alias("s"),
-                   F.col("event_type").alias("t"))
-          .agg(F.count(F.lit(1)).alias("n")))
-    wn = Window.partitionBy("s")
-    tp = (tc.select("s", "t", (F.col("n").cast("double")
-                               / F.sum("n").over(wn)).alias("p"))
-          .localCheckpoint(eager=False))
-    states = tc.select(F.col("s").alias("st")).distinct()
-    ns = states.agg(F.count(F.lit(1)).alias("k"))
-    pr = (states.crossJoin(F.broadcast(ns))
-          .select("st", (F.lit(1.0) / F.col("k")).alias("pr")))
-    for _ in range(MARKOV_ITERS):
-        pr = (tp.join(F.broadcast(pr), tp.s == pr.st)
-              .groupBy(F.col("t").alias("st"))
-              .agg(F.round(F.sum(F.col("pr") * F.col("p")), 6)
-                   .alias("pr")))
+    tc = _transition_counts(spark, sf_dir)
+    tp = _transition_probs(tc).localCheckpoint(eager=False)
+    pr, ns = _stationary(tc, tp)
     hrow = (tp.groupBy(F.col("s").alias("st"))
             .agg(F.sum(F.col("p") * F.log(1.0 / F.col("p"))
                        / math.log(2.0)).alias("hs")))

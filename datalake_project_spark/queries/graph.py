@@ -18,7 +18,7 @@ realization as DataFrame joins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from datalake_project_spark.catalog import Catalog
 from datalake_project_spark.queries import register
@@ -41,6 +41,69 @@ _EDGES_SQL = """
     nodes AS (SELECT DISTINCT name FROM (
         SELECT src AS name FROM edges UNION SELECT dst FROM edges)),
     nn AS (SELECT COUNT(*) AS n FROM nodes)"""
+
+
+def _trade_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders ⋈ customer ⋈ nation ⋈ lineitem ⋈ supplier ⋈ nation: one row
+    per line item, carrying its customer nation ``src`` and supplier
+    nation ``dst`` — the join every nation-trade-graph query starts from
+    (``_EDGES_SQL`` is its oracle twin)."""
+    cat = Catalog(spark, sf_dir)
+    o, c, li, s, n = (cat.table(t) for t in
+                      ("orders", "customer", "lineitem", "supplier", "nation"))
+    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
+    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
+    return (o.join(c, o.o_custkey == c.c_custkey)
+            .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
+            .join(li, F.col("l_orderkey") == o.o_orderkey)
+            .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
+            .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk")))
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trade graph's directed edges (src, dst, w = line count)."""
+    return (_trade_rows(spark, sf_dir)
+            .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    """Distinct endpoint names of ``edges`` as column ``name``."""
+    return (edges.select(F.col("src").alias("name"))
+            .union(edges.select(F.col("dst").alias("name"))).distinct())
+
+
+def _out_fractions(edges: DataFrame) -> DataFrame:
+    """(src, dst, frac): each edge's share of its source's out-weight."""
+    outs = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
+    return (edges.join(outs, "src")
+            .select("src", "dst", (F.col("w") / F.col("wout")).alias("frac")))
+
+
+def _inflow(frac: DataFrame, ranks: DataFrame) -> DataFrame:
+    """(dst, mass): the rank (name, r) each node receives along ``frac``
+    — one Pregel step's src join and dst aggregate."""
+    return (frac.join(ranks.select(F.col("name").alias("src"),
+                                   F.col("r").alias("pr")), "src")
+            .groupBy("dst")
+            .agg(F.sum(F.col("pr") * F.col("frac")).alias("mass")))
+
+
+def _triangles(ue: DataFrame) -> DataFrame:
+    """Each triangle of the undirected edges ``ue`` (u < v) once, as the
+    join e1=(a,b) ⋈ e2=(a,c) ⋈ e3=(b,c) with a < b < c (aliases e1-e3)."""
+    e1, e2, e3 = ue.alias("e1"), ue.alias("e2"), ue.alias("e3")
+    return (e1.join(e2, (F.col("e2.u") == F.col("e1.u"))
+                    & (F.col("e2.v") > F.col("e1.v")))
+            .join(e3, (F.col("e3.u") == F.col("e1.v"))
+                  & (F.col("e3.v") == F.col("e2.v"))))
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Distinct undirected edges (u < v) of ``edges``, self-loops dropped."""
+    return (edges.where(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("u"),
+                    F.greatest("src", "dst").alias("v"))
+            .distinct())
 
 
 def _pagerank_oracle(n_iter: int) -> str:
@@ -77,32 +140,14 @@ def _pagerank_oracle(n_iter: int) -> str:
         "in-edge summation order can't flip the hash.",
 )
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w")))
-    outs = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    edges = _trade_edges(spark, sf_dir)
+    nodes = _nodes(edges)
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
     ranks = (nodes.crossJoin(F.broadcast(nn))
              .select("name", (F.lit(1.0) / F.col("n")).alias("r")))
-    contrib_edges = (edges.join(outs, "src")
-                     .select("src", "dst", (F.col("w") / F.col("wout"))
-                             .alias("frac")))
+    frac = _out_fractions(edges)
     for _ in range(N_ITER):
-        contribs = (contrib_edges
-                    .join(ranks.select(F.col("name").alias("src"),
-                                       F.col("r").alias("pr")), "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("pr") * F.col("frac")).alias("mass")))
+        contribs = _inflow(frac, ranks)
         ranks = (nodes.join(contribs, nodes.name == contribs.dst, "left")
                  .crossJoin(F.broadcast(nn))
                  .select("name",
@@ -136,28 +181,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "predicate before the closing-edge join.",
 )
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .select("src", "dst").distinct())
-    ue = (edges.where(F.col("src") != F.col("dst"))
-          .select(F.least("src", "dst").alias("u"),
-                  F.greatest("src", "dst").alias("v"))
-          .distinct())
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
-    e1, e2, e3 = ue.alias("e1"), ue.alias("e2"), ue.alias("e3")
-    tri = (e1.join(e2, (F.col("e2.u") == F.col("e1.u"))
-                   & (F.col("e2.v") > F.col("e1.v")))
-           .join(e3, (F.col("e3.u") == F.col("e1.v"))
-                 & (F.col("e3.v") == F.col("e2.v")))
+    edges = _trade_rows(spark, sf_dir).select("src", "dst").distinct()
+    ue = _undirected(edges)
+    nodes = _nodes(edges)
+    tri = (_triangles(ue)
            .agg(F.count(F.lit(1)).alias("n_triangles")))
     return (nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
             .crossJoin(F.broadcast(ue.agg(F.count(F.lit(1)).alias("n_edges"))))
@@ -186,21 +213,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node-keyed with map-side partials.",
 )
 def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .select("src", "dst").distinct())
-    ue = (edges.where(F.col("src") != F.col("dst"))
-          .select(F.least("src", "dst").alias("u"),
-                  F.greatest("src", "dst").alias("v"))
-          .distinct())
+    edges = _trade_rows(spark, sf_dir).select("src", "dst").distinct()
+    ue = _undirected(edges)
     deg = (ue.select(F.col("u").alias("name"))
            .unionAll(ue.select(F.col("v").alias("name")))
            .groupBy("name").agg(F.count(F.lit(1)).alias("degree")))
@@ -241,21 +255,11 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
         "construction is the only fact-table work.",
 )
 def q_graph_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    w = (o.join(c, o.o_custkey == c.c_custkey)
-         .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-         .join(li, F.col("l_orderkey") == o.o_orderkey)
-         .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-         .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
+    w = (_trade_rows(spark, sf_dir)
          .groupBy("src", "dst")
          .agg(F.sum(F.col("l_extendedprice")
                     * (1 - F.col("l_discount"))).alias("v")))
-    nodes = (w.select(F.col("src").alias("name"))
-             .union(w.select(F.col("dst").alias("name"))).distinct())
+    nodes = _nodes(w)
     imports = w.groupBy(F.col("src").alias("nation")).agg(
         F.sum("v").alias("imports"))
     exports = w.groupBy(F.col("dst").alias("nation")).agg(
@@ -376,29 +380,25 @@ def _labelprop_oracle(n_iter: int) -> str:
         "actions.",
 )
 def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              .where(F.col("src") != F.col("dst"))
              # nation-pair-sized; consumed by sym (twice), nodes
              # (twice), and through both propagation rounds
              .localCheckpoint(eager=False))
+    labels = _propagate_labels(edges, _nodes(edges))
+    return labels.select(F.col("node").alias("nation"),
+                         F.col("lab").alias("community"))
+
+
+def _propagate_labels(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Two rounds of weighted label propagation over ``edges`` made
+    symmetric: each node takes its neighbours' heaviest label (ties to
+    the smallest), a node without neighbours keeps its own name.
+    Returns (node, lab)."""
     sym = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
            .unionAll(edges.select(F.col("dst").alias("u"),
                                   F.col("src").alias("v"), "w"))
            .groupBy("u", "v").agg(F.sum("w").cast("long").alias("w")))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
     labels = nodes.select(F.col("name").alias("node"),
                           F.col("name").alias("lab"))
     win = Window.partitionBy("node").orderBy(F.col("sw").desc(), F.col("lab"))
@@ -412,8 +412,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = (nodes.join(best, nodes.name == best.node, "left")
                   .select(F.col("name").alias("node"),
                           F.coalesce("lab", F.col("name")).alias("lab")))
-    return labels.select(F.col("node").alias("nation"),
-                         F.col("lab").alias("community"))
+    return labels
 
 
 N_BF = 3  # Bellman-Ford relaxation rounds (graph diameter bound)
@@ -455,25 +454,14 @@ def _bf_oracle(n_iter: int) -> str:
         "the standard distributed Bellman-Ford.",
 )
 def q_graph_shortest_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              # nation-pair-sized result of a 5-way fact join, consumed
              # by the cost table, node set, source scalar, and every
              # relaxation layer: materialize once
              .localCheckpoint(eager=False))
     ec = edges.select("src", "dst",
                       F.ceil(F.lit(100000.0) / F.col("w")).alias("cost"))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    nodes = _nodes(edges)
     src1 = edges.agg(F.min("src").alias("sname"))
     dist = (nodes.crossJoin(F.broadcast(src1))
             .select("name", F.when(F.col("name") == F.col("sname"),
@@ -515,17 +503,7 @@ def q_graph_shortest_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
         "convention), rounded at 6 dp.",
 )
 def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
+    edges = (_trade_edges(spark, sf_dir)
              .where(F.col("src") != F.col("dst"))
              .localCheckpoint(eager=False))
     und = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
@@ -815,22 +793,8 @@ def _hits_oracle(n_iter: int) -> str:
         "actions; the normalizing sum is a broadcast 1-row aggregate.",
 )
 def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-             .localCheckpoint(eager=False))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=False)
+    nodes = _nodes(edges)
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
     h = (nodes.crossJoin(F.broadcast(nn))
          .select("name", (F.lit(1.0) / F.col("n")).alias("h")))
@@ -907,34 +871,13 @@ def _ppr_oracle(n_iter: int) -> str:
 )
 def q_graph_personalized_pagerank(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-             .localCheckpoint(eager=False))
-    outs = edges.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
-    nodes = (edges.select(F.col("src").alias("name"))
-             .union(edges.select(F.col("dst").alias("name"))).distinct())
+    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=False)
+    nodes = _nodes(edges)
     seed = F.when(F.col("name") == PPR_SEED, 1.0).otherwise(0.0)
     ranks = nodes.select("name", seed.alias("r"))
-    contrib_edges = (edges.join(outs, "src")
-                     .select("src", "dst",
-                             (F.col("w") / F.col("wout")).alias("frac")))
+    frac = _out_fractions(edges)
     for _ in range(N_ITER):
-        contribs = (contrib_edges
-                    .join(ranks.select(F.col("name").alias("src"),
-                                       F.col("r").alias("pr")), "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("pr") * F.col("frac")).alias("mass")))
+        contribs = _inflow(frac, ranks)
         ranks = (nodes.join(contribs, nodes.name == contribs.dst, "left")
                  .select("name",
                          ((1.0 - DAMPING) * seed
@@ -1000,43 +943,9 @@ def _modularity_oracle(n_iter: int) -> str:
         "community beyond LP itself.",
 )
 def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier", "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    from pyspark.sql import Window
-
-    edges_all = (o.join(c, o.o_custkey == c.c_custkey)
-                 .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-                 .join(li, F.col("l_orderkey") == o.o_orderkey)
-                 .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-                 .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-                 .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-                 .localCheckpoint(eager=False))
+    edges_all = _trade_edges(spark, sf_dir).localCheckpoint(eager=False)
     edges = edges_all.where(F.col("src") != F.col("dst"))
-    sym = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
-           .unionAll(edges.select(F.col("dst").alias("u"),
-                                  F.col("src").alias("v"), "w"))
-           .groupBy("u", "v").agg(F.sum("w").cast("long").alias("w")))
-    nodes = (edges_all.select(F.col("src").alias("name"))
-             .union(edges_all.select(F.col("dst").alias("name"))).distinct())
-    labels = nodes.select(F.col("name").alias("node"),
-                          F.col("name").alias("lab"))
-    win = Window.partitionBy("node").orderBy(F.col("sw").desc(), F.col("lab"))
-    for _ in range(2):
-        votes = (sym.join(labels.select(F.col("node").alias("v"),
-                                        F.col("lab")), "v")
-                 .groupBy(F.col("u").alias("node"), "lab")
-                 .agg(F.sum("w").cast("long").alias("sw")))
-        best = (votes.withColumn("rn", F.row_number().over(win))
-                .where(F.col("rn") == 1).select("node", "lab"))
-        labels = (nodes.join(best, nodes.name == best.node, "left")
-                  .select(F.col("name").alias("node"),
-                          F.coalesce("lab", F.col("name")).alias("lab")))
-    comm = labels
+    comm = _propagate_labels(edges, _nodes(edges_all))
     m = edges.agg(F.sum("w").cast("long").alias("m"))
     cs = comm.select(F.col("node").alias("src"), F.col("lab").alias("slab"))
     cd = comm.select(F.col("node").alias("dst"), F.col("lab").alias("dlab"))
@@ -1112,33 +1021,13 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "derivation.",
 )
 def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier",
-                       "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .select("src", "dst").distinct())
-    ue = (edges.where(F.col("src") != F.col("dst"))
-          .select(F.least("src", "dst").alias("u"),
-                  F.greatest("src", "dst").alias("v"))
-          .distinct().localCheckpoint(eager=False))
+    edges = _trade_rows(spark, sf_dir).select("src", "dst").distinct()
+    ue = _undirected(edges).localCheckpoint(eager=False)
     adj = (ue.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
            .unionAll(ue.select(F.col("v").alias("node"),
                                F.col("u").alias("nbr"))))
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    e1, e2, e3 = ue.alias("e1"), ue.alias("e2"), ue.alias("e3")
-    tri = (e1.join(e2, (F.col("e2.u") == F.col("e1.u"))
-                   & (F.col("e2.v") > F.col("e1.v")))
-           .join(e3, (F.col("e3.u") == F.col("e1.v"))
-                 & (F.col("e3.v") == F.col("e2.v")))
+    tri = (_triangles(ue)
            .select(F.col("e1.u").alias("a"), F.col("e1.v").alias("b"),
                    F.col("e2.v").alias("c")))
     pert = (tri.select(F.col("a").alias("node"))
@@ -1185,21 +1074,7 @@ def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate (<= |nations|^2 rows), never on lineitem.",
 )
 def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    o, c, li, s, n = (cat.table(t) for t in
-                      ("orders", "customer", "lineitem", "supplier",
-                       "nation"))
-    cn = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("src"))
-    sn = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("dst"))
-    edges = (o.join(c, o.o_custkey == c.c_custkey)
-             .join(F.broadcast(cn), F.col("c_nationkey") == F.col("c_nk"))
-             .join(li, F.col("l_orderkey") == o.o_orderkey)
-             .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-             .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-             .where(F.col("src") != F.col("dst")))
+    edges = _trade_edges(spark, sf_dir).where(F.col("src") != F.col("dst"))
     rev = edges.select(F.col("dst").alias("src"),
                        F.col("src").alias("dst"),
                        F.col("w").alias("w_rev"))

@@ -546,6 +546,23 @@ def q_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Isotonic calibration (exact PAV via the minimax formula)
 # --------------------------------------------------------------------------
 
+def _length_labelled_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, prob, y): the vocabulary classifier's probability, rounded
+    inside the aggregate as these evals' oracles do (not the logit path
+    of ``ml._classifier_scores``), beside the long-text label
+    y = length >= 500."""
+    from datalake_project_spark.queries.ml import _token_weights
+
+    d = Catalog(spark, sf_dir).table("documents")
+    cls = (_token_weights(d)
+           .groupBy("doc_id")
+           .agg(F.round(1.0 / (1.0 + F.exp(-F.avg("w"))), 4).alias("prob")))
+    lab = d.select(
+        "doc_id",
+        F.when(F.length("text") >= 500, 1).otherwise(0).alias("y"))
+    return cls.join(lab, "doc_id")
+
+
 @register(
     "q_classifier_isotonic",
     oracle="""
@@ -605,22 +622,7 @@ def q_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_classifier_conformal (coverage).",
 )
 def q_classifier_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    ex = (d.select("doc_id", T.tokens("text").alias("toks"))
-          .where(F.size("toks") > 0)
-          .select("doc_id", F.explode("toks").alias("t")))
-    vocab = (ex.select("t").distinct()
-             .select("t", (((F.length("t") % 7) - 3)
-                           * F.lit(0.05)).cast("double").alias("w")))
-    cls = (ex.join(F.broadcast(vocab), "t")
-           .groupBy("doc_id")
-           .agg(F.round(1.0 / (1.0 + F.exp(-F.avg("w"))), 4).alias("prob")))
-    lab = d.select(
-        "doc_id",
-        F.when(F.length("text") >= 500, 1).otherwise(0).alias("y"))
-    bins = (cls.join(lab, "doc_id")
+    bins = (_length_labelled_scores(spark, sf_dir)
             .groupBy(F.least(F.lit(19), F.greatest(F.lit(0), F.floor(
                 (F.col("prob") - 0.505) * 800).cast("int"))).alias("bin"))
             .agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy"),
@@ -1965,22 +1967,7 @@ def q_feature_mutual_information(spark: SparkSession,
 )
 def q_classifier_brier_decomposition(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    ex = (d.select("doc_id", T.tokens("text").alias("toks"))
-          .where(F.size("toks") > 0)
-          .select("doc_id", F.explode("toks").alias("t")))
-    vocab = (ex.select("t").distinct()
-             .select("t", (((F.length("t") % 7) - 3)
-                           * F.lit(0.05)).cast("double").alias("w")))
-    cls = (ex.join(F.broadcast(vocab), "t")
-           .groupBy("doc_id")
-           .agg(F.round(1.0 / (1.0 + F.exp(-F.avg("w"))), 4).alias("prob")))
-    lab = d.select(
-        "doc_id",
-        F.when(F.length("text") >= 500, 1).otherwise(0).alias("y"))
-    scored = (cls.join(lab, "doc_id")
+    scored = (_length_labelled_scores(spark, sf_dir)
               .select(F.least(F.lit(19), F.greatest(F.lit(0), F.floor(
                   (F.col("prob") - 0.505) * 800).cast("int"))).alias("bin"),
                   "prob", F.col("y").cast("double").alias("y")))
@@ -2203,8 +2190,7 @@ def q_stats_join_cardinality_audit(spark: SparkSession,
         "the work.",
 )
 def q_sql_scripting_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = Catalog(spark, sf_dir)
-    cat.sql("SELECT 1").collect()  # ensure views are registered
+    Catalog(spark, sf_dir).register_views()
     return spark.sql("""
     BEGIN
       DECLARE half DOUBLE;
@@ -3129,6 +3115,26 @@ def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cramér's V — effect size for categorical association
 # --------------------------------------------------------------------------
 
+def _segment_priority_table(spark: SparkSession, sf_dir: str):
+    """The market-segment x order-priority contingency table: cells
+    (seg, pri, o), row sums (seg, r), column sums (pri, c) and the
+    1-row total (n). The cells are checkpointed: every marginal and
+    the test statistic read them."""
+    c = Catalog(spark, sf_dir)
+    j = (c.table("orders")
+         .join(F.broadcast(c.table("customer")
+                           .select("c_custkey", "c_mktsegment")),
+               F.col("o_custkey") == F.col("c_custkey"))
+         .select(F.col("c_mktsegment").alias("seg"),
+                 F.col("o_orderpriority").alias("pri")))
+    cell = (j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
+            .localCheckpoint(eager=False))
+    rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
+    cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
+    n_ = cell.agg(F.sum("o").alias("n"))
+    return cell, rs, cs, n_
+
+
 @register(
     "q_stats_cramers_v",
     oracle="""
@@ -3166,18 +3172,7 @@ def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "count.",
 )
 def q_stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    j = (c.table("orders")
-         .join(F.broadcast(c.table("customer")
-                           .select("c_custkey", "c_mktsegment")),
-               F.col("o_custkey") == F.col("c_custkey"))
-         .select(F.col("c_mktsegment").alias("seg"),
-                 F.col("o_orderpriority").alias("pri")))
-    cell = (j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
-            .localCheckpoint(eager=False))
-    rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
-    cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
-    n_ = cell.agg(F.sum("o").alias("n"))
+    cell, rs, cs, n_ = _segment_priority_table(spark, sf_dir)
     exp = F.col("r") * F.col("c") * 1.0 / F.col("n")
     chi = (cell.join(F.broadcast(rs), "seg").join(F.broadcast(cs), "pri")
            .crossJoin(F.broadcast(n_))
@@ -3349,6 +3344,20 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kendall's tau — rank concordance between two daily series
 # --------------------------------------------------------------------------
 
+def _daily_clicks_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, x, y): click and purchase counts per day, the paired series
+    the rank and sign tests compare."""
+    e = (Catalog(spark, sf_dir).table("events")
+         .where(F.col("event_type").isin("click", "purchase")))
+    return (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
+                     "event_type")
+            .groupBy("day")
+            .agg(F.sum(F.when(F.col("event_type") == "click", 1)
+                       .otherwise(0)).alias("x"),
+                 F.sum(F.when(F.col("event_type") == "purchase", 1)
+                       .otherwise(0)).alias("y")))
+
+
 @register(
     "q_stats_kendall_tau",
     oracle="""
@@ -3389,16 +3398,7 @@ def q_stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Kendall's tau of series vs time.",
 )
 def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("events")
-         .where(F.col("event_type").isin("click", "purchase")))
-    d = (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
-                  "event_type")
-         .groupBy("day")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("y"))
-         .localCheckpoint(eager=False))
+    d = _daily_clicks_purchases(spark, sf_dir).localCheckpoint(eager=False)
     b = d.select(F.col("day").alias("d2"), F.col("x").alias("x2"),
                  F.col("y").alias("y2"))
     prod = (F.col("x2") - F.col("x")) * (F.col("y2") - F.col("y"))
@@ -3423,6 +3423,34 @@ def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # TOST equivalence test — proving "no meaningful difference"
 # --------------------------------------------------------------------------
+
+def _purchase_arm_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1 row (na, nb, ma, mb, va, vb): purchase count, mean and sample
+    variance of the purchase value in cents per arm (a = odd user_id),
+    from BIGINT power sums."""
+    base = (Catalog(spark, sf_dir).table("events")
+            .where((F.col("event_type") == "purchase")
+                   & F.col("value").isNotNull())
+            .select(F.when(F.col("user_id") % 2 == 1, "a")
+                    .otherwise("b").alias("arm"),
+                    F.round(F.col("value") * 100).cast("long")
+                    .alias("cents")))
+    g = base.groupBy("arm").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("cents").alias("s1"),
+        F.sum(F.col("cents") * F.col("cents")).alias("s2"))
+    mean = F.col("s1").cast("double") / F.col("n")
+    var = ((F.col("s2").cast("double")
+            - F.col("s1").cast("double") * F.col("s1") / F.col("n"))
+           / (F.col("n") - 1))
+    return g.agg(
+        F.max(F.when(F.col("arm") == "a", F.col("n"))).alias("na"),
+        F.max(F.when(F.col("arm") == "b", F.col("n"))).alias("nb"),
+        F.max(F.when(F.col("arm") == "a", mean)).alias("ma"),
+        F.max(F.when(F.col("arm") == "b", mean)).alias("mb"),
+        F.max(F.when(F.col("arm") == "a", var)).alias("va"),
+        F.max(F.when(F.col("arm") == "b", var)).alias("vb"))
+
 
 @register(
     "q_stats_tost_equivalence",
@@ -3481,28 +3509,7 @@ def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(assignment integrity).",
 )
 def q_stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = (Catalog(spark, sf_dir).table("events")
-            .where((F.col("event_type") == "purchase")
-                   & F.col("value").isNotNull())
-            .select(F.when(F.col("user_id") % 2 == 1, "a")
-                    .otherwise("b").alias("arm"),
-                    F.round(F.col("value") * 100).cast("long")
-                    .alias("cents")))
-    g = base.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").alias("s1"),
-        F.sum(F.col("cents") * F.col("cents")).alias("s2"))
-    mean = F.col("s1").cast("double") / F.col("n")
-    var = ((F.col("s2").cast("double")
-            - F.col("s1").cast("double") * F.col("s1") / F.col("n"))
-           / (F.col("n") - 1))
-    w = g.agg(
-        F.max(F.when(F.col("arm") == "a", F.col("n"))).alias("na"),
-        F.max(F.when(F.col("arm") == "b", F.col("n"))).alias("nb"),
-        F.max(F.when(F.col("arm") == "a", mean)).alias("ma"),
-        F.max(F.when(F.col("arm") == "b", mean)).alias("mb"),
-        F.max(F.when(F.col("arm") == "a", var)).alias("va"),
-        F.max(F.when(F.col("arm") == "b", var)).alias("vb"))
+    w = _purchase_arm_moments(spark, sf_dir)
     diff = (F.col("ma") - F.col("mb")) / 100.0
     se = F.sqrt(F.col("va") / F.col("na") + F.col("vb") / F.col("nb")) / 100.0
     margin = 0.05 * ((F.col("ma") + F.col("mb")) / 2.0) / 100.0
@@ -3613,6 +3620,17 @@ def _lnc(lnf: str, a: str, b: str) -> str:
             f" - {lnf.format(n=f'({a}) - ({b})')})")
 
 
+def _user_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(arm, s): one row per user, arm a (odd user_id) or b, s = 1 if the
+    user ever purchased."""
+    e = Catalog(spark, sf_dir).table("events")
+    return (e.groupBy("user_id")
+            .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
+                       .otherwise(0)).alias("s"))
+            .select(F.when(F.col("user_id") % 2 == 1, "a")
+                    .otherwise("b").alias("arm"), "s"))
+
+
 @register(
     "q_stats_fisher_exact",
     oracle=f"""
@@ -3667,12 +3685,7 @@ def _lnc(lnf: str, a: str, b: str) -> str:
         "corpus scale only touches the per-user group-by.",
 )
 def q_stats_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    conv = (e.groupBy("user_id")
-            .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
-                       .otherwise(0)).alias("s"))
-            .select(F.when(F.col("user_id") % 2 == 1, "a")
-                    .otherwise("b").alias("arm"), "s"))
+    conv = _user_conversions(spark, sf_dir)
     c = conv.agg(
         F.count(F.lit(1)).alias("nn"),
         F.sum(F.when(F.col("arm") == "a", 1).otherwise(0)).alias("na"),
@@ -3754,15 +3767,7 @@ def q_stats_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast row.",
 )
 def q_stats_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("events")
-         .where(F.col("event_type").isin("click", "purchase")))
-    d = (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
-                  "event_type")
-         .groupBy("day")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("y")))
+    d = _daily_clicks_purchases(spark, sf_dir)
     s = d.agg(
         F.sum(F.when(F.col("x") > F.col("y"), 1).otherwise(0))
          .alias("plus"),
@@ -3843,15 +3848,7 @@ def q_stats_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stats_wilcoxon_signed_rank(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("events")
-         .where(F.col("event_type").isin("click", "purchase")))
-    d = (e.select(F.expr("unix_micros(ts) div 86400000000").alias("day"),
-                  "event_type")
-         .groupBy("day")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("y")))
+    d = _daily_clicks_purchases(spark, sf_dir)
     nz = (d.where(F.col("x") != F.col("y"))
           .select("day", (F.col("x") - F.col("y")).alias("diff"),
                   F.abs(F.col("x") - F.col("y")).alias("ad"))
@@ -4017,27 +4014,7 @@ def q_stats_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
         "it matter) now complete.",
 )
 def q_stats_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = (Catalog(spark, sf_dir).table("events")
-            .where((F.col("event_type") == "purchase")
-                   & F.col("value").isNotNull())
-            .select(F.when(F.col("user_id") % 2 == 1, "a")
-                    .otherwise("b").alias("arm"),
-                    F.round(F.col("value") * 100).cast("long").alias("c")))
-    g = base.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("s1"),
-        F.sum(F.col("c") * F.col("c")).alias("s2"))
-    mean = F.col("s1").cast("double") / F.col("n")
-    var = ((F.col("s2").cast("double")
-            - F.col("s1").cast("double") * F.col("s1") / F.col("n"))
-           / (F.col("n") - 1))
-    w = g.agg(
-        F.max(F.when(F.col("arm") == "a", F.col("n"))).alias("na"),
-        F.max(F.when(F.col("arm") == "b", F.col("n"))).alias("nb"),
-        F.max(F.when(F.col("arm") == "a", mean)).alias("ma"),
-        F.max(F.when(F.col("arm") == "b", mean)).alias("mb"),
-        F.max(F.when(F.col("arm") == "a", var)).alias("va"),
-        F.max(F.when(F.col("arm") == "b", var)).alias("vb"))
+    w = _purchase_arm_moments(spark, sf_dir)
     sp = F.sqrt(((F.col("na") - 1) * F.col("va")
                  + (F.col("nb") - 1) * F.col("vb"))
                 / (F.col("na") + F.col("nb") - 2))
@@ -4098,12 +4075,7 @@ def q_stats_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         "no-effect-at-5% verdict.",
 )
 def q_stats_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    conv = (e.groupBy("user_id")
-            .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
-                       .otherwise(0)).alias("s"))
-            .select(F.when(F.col("user_id") % 2 == 1, "a")
-                    .otherwise("b").alias("arm"), "s"))
+    conv = _user_conversions(spark, sf_dir)
     m = conv.agg(
         F.sum(F.when((F.col("arm") == "a") & (F.col("s") == 1), 1)
               .otherwise(0)).alias("a"),
@@ -4171,18 +4143,7 @@ def q_stats_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "since the cell simply doesn't exist in the sparse relation).",
 )
 def q_stats_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = Catalog(spark, sf_dir)
-    j = (c.table("orders")
-         .join(F.broadcast(c.table("customer")
-                           .select("c_custkey", "c_mktsegment")),
-               F.col("o_custkey") == F.col("c_custkey"))
-         .select(F.col("c_mktsegment").alias("seg"),
-                 F.col("o_orderpriority").alias("pri")))
-    cell = (j.groupBy("seg", "pri").agg(F.count(F.lit(1)).alias("o"))
-            .localCheckpoint(eager=False))
-    rs = cell.groupBy("seg").agg(F.sum("o").alias("r"))
-    cs = cell.groupBy("pri").agg(F.sum("o").alias("c"))
-    n_ = cell.agg(F.sum("o").alias("n"))
+    cell, rs, cs, n_ = _segment_priority_table(spark, sf_dir)
     exp = F.col("r") * F.col("c") * 1.0 / F.col("n")
     g = (cell.join(F.broadcast(rs), "seg").join(F.broadcast(cs), "pri")
          .crossJoin(F.broadcast(n_))
@@ -4435,6 +4396,15 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("h_raw") / corr > 9.488).alias("reject_at_5pct"))
 
 
+def _daily_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, day 'yyyy-MM-dd', n): events per type per day."""
+    e = Catalog(spark, sf_dir).table("events")
+    return (e.groupBy("event_type",
+                      F.date_format(F.date_trunc("day", "ts"),
+                                    "yyyy-MM-dd").alias("day"))
+            .agg(F.count(F.lit(1)).alias("n")))
+
+
 @register(
     "q_stats_cusum_monitor",
     oracle="""
@@ -4481,11 +4451,7 @@ def q_stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "uses an (|S|, day) total order.",
 )
 def q_stats_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    daily = (e.groupBy("event_type",
-                       F.date_format(F.date_trunc("day", "ts"),
-                                     "yyyy-MM-dd").alias("day"))
-             .agg(F.count(F.lit(1)).alias("n")))
+    daily = _daily_type_counts(spark, sf_dir)
     st = (daily.groupBy("event_type")
           .agg(F.count(F.lit(1)).alias("n_days"),
                F.avg("n").alias("mu"),
@@ -4567,11 +4533,7 @@ def q_stats_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "identical day order. All windows keyed by event_type.",
 )
 def q_stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = Catalog(spark, sf_dir).table("events")
-    daily = (e.groupBy("event_type",
-                       F.date_format(F.date_trunc("day", "ts"),
-                                     "yyyy-MM-dd").alias("day"))
-             .agg(F.count(F.lit(1)).alias("n")))
+    daily = _daily_type_counts(spark, sf_dir)
     mu = (daily.groupBy("event_type")
           .agg(F.avg("n").alias("mu"), F.count(F.lit(1)).alias("nd")))
     w = Window.partitionBy("event_type").orderBy("day")

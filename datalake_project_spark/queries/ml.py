@@ -124,6 +124,28 @@ def _assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     return best
 
 
+def _lloyd(e: DataFrame, k: int, n_iter: int) -> DataFrame:
+    """(cluster, cvec): the centroids after ``n_iter`` Lloyd updates over
+    ``e`` (vec_id, v), seeded with vectors 0..k-1; an empty cluster keeps
+    its previous centroid."""
+    cents = (e.where(F.col("vec_id") < k)
+             .select(F.col("vec_id").cast("int").alias("cluster"),
+                     F.col("v").alias("cvec")))
+    for _ in range(n_iter):
+        upd = (_assign(e, cents)
+               .select("cluster", F.posexplode("v").alias("dim", "x"))
+               .groupBy("cluster", "dim")
+               .agg(F.round(F.avg("x"), CENT_DP).alias("av"))
+               .groupBy("cluster")
+               .agg(F.transform(
+                   F.array_sort(F.collect_list(F.struct("dim", "av"))),
+                   lambda s: s.av).alias("ucvec")))
+        cents = (cents.join(upd, "cluster", "left")
+                 .select("cluster",
+                         F.coalesce("ucvec", "cvec").alias("cvec")))
+    return cents
+
+
 @register(
     "q_embed_kmeans",
     oracle=_kmeans_oracle(K_CLUSTERS, N_ITER),
@@ -153,22 +175,7 @@ def _kmeans_cents(spark: SparkSession,
     e = (Catalog(spark, sf_dir).table("embeddings")
          .select("vec_id", F.transform(
              "embedding", lambda x: x.cast("double")).alias("v")))
-    cents = (e.where(F.col("vec_id") < K_CLUSTERS)
-             .select(F.col("vec_id").cast("int").alias("cluster"),
-                     F.col("v").alias("cvec")))
-    for _ in range(N_ITER):
-        assigned = _assign(e, cents)
-        upd = (assigned.select("cluster", F.posexplode("v").alias("dim", "x"))
-               .groupBy("cluster", "dim")
-               .agg(F.round(F.avg("x"), CENT_DP).alias("av"))
-               .groupBy("cluster")
-               .agg(F.transform(
-                   F.array_sort(F.collect_list(F.struct("dim", "av"))),
-                   lambda s: s.av).alias("ucvec")))
-        cents = (cents.join(upd, "cluster", "left")
-                 .select("cluster",
-                         F.coalesce("ucvec", "cvec").alias("cvec")))
-    return e, cents
+    return e, _lloyd(e, K_CLUSTERS, N_ITER)
 
 
 def _kmeans_final(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,6 +245,23 @@ def _gram_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         })
 
 
+def _gram_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(i, j, n, sxy, si, sj): the embedding Gram partials reduced per
+    dim pair i <= j."""
+    e = (Catalog(spark, sf_dir).table("embeddings")
+         .select(F.col("embedding").alias("v")))
+    partials = e.mapInPandas(_gram_partials, schema=_MOMENT_SCHEMA)
+    return (partials.groupBy("i", "j")
+            .agg(F.sum("n").alias("n"), F.sum("sxy").alias("sxy"),
+                 F.sum("si").alias("si"), F.sum("sj").alias("sj")))
+
+
+def _covariance():
+    """Population covariance of dims i, j over _gram_moments' columns."""
+    return (F.col("sxy") / F.col("n")
+            - (F.col("si") / F.col("n")) * (F.col("sj") / F.col("n")))
+
+
 @register(
     "q_embed_covariance",
     oracle="""
@@ -260,15 +284,8 @@ def _gram_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         "(row, i, j) self-join instead and must agree at 4 dp.",
 )
 def q_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select(F.col("embedding").alias("v")))
-    partials = e.mapInPandas(_gram_partials, schema=_MOMENT_SCHEMA)
-    tot = (partials.groupBy("i", "j")
-           .agg(F.sum("n").alias("n"), F.sum("sxy").alias("sxy"),
-                F.sum("si").alias("si"), F.sum("sj").alias("sj")))
-    cov = (F.col("sxy") / F.col("n")
-           - (F.col("si") / F.col("n")) * (F.col("sj") / F.col("n")))
-    return tot.select("i", "j", (F.round(cov, 4) + F.lit(0.0)).alias("cov"))
+    return _gram_moments(spark, sf_dir).select(
+        "i", "j", (F.round(_covariance(), 4) + F.lit(0.0)).alias("cov"))
 
 
 # --------------------------------------------------------------------------
@@ -304,19 +321,25 @@ def q_text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _classifier_scores(spark, sf_dir)
 
 
-def _classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, prob, keep) — shared by the classifier query and the
-    calibration eval."""
+def _token_weights(d: DataFrame) -> DataFrame:
+    """(t, doc_id, w): every token of ``d``'s non-empty documents beside
+    its stand-in classifier weight, the vocabulary table broadcast."""
     from datalake_project_spark.functions import text as T
 
-    d = Catalog(spark, sf_dir).table("documents")
     ex = (d.select("doc_id", T.tokens("text").alias("toks"))
           .where(F.size("toks") > 0)
           .select("doc_id", F.explode("toks").alias("t")))
     vocab = (ex.select("t").distinct()
              .select("t", (((F.length("t") % 7) - 3)
                            * F.lit(0.05)).cast("double").alias("w")))
-    lg = (ex.join(F.broadcast(vocab), "t")
+    return ex.join(F.broadcast(vocab), "t")
+
+
+def _classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, prob, keep) — shared by the classifier query and the
+    calibration eval."""
+    d = Catalog(spark, sf_dir).table("documents")
+    lg = (_token_weights(d)
           .groupBy("doc_id").agg(F.avg("w").alias("logit")))
     return lg.select(
         "doc_id",
@@ -334,6 +357,20 @@ _CLS_CTE = f"""
     cls AS (SELECT ex.doc_id,
                    ROUND(1.0 / (1.0 + exp(-AVG(vocab.w))), 4) AS prob
             FROM ex JOIN vocab USING (t) GROUP BY ex.doc_id)"""
+
+
+def _scored_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, prob, keep, quality): the classifier's score beside the
+    heuristic quality score (q_text_quality's formula at 4 dp)."""
+    from datalake_project_spark.functions import text as T
+
+    cls = _classifier_scores(spark, sf_dir)
+    d = Catalog(spark, sf_dir).table("documents")
+    qual = d.select(
+        "doc_id",
+        F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
+        .alias("quality"))
+    return cls.join(qual, "doc_id")
 
 
 @register(
@@ -377,15 +414,7 @@ _CLS_CTE = f"""
         "identically-rounded probs so the oracle bins identically.",
 )
 def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    cls = _classifier_scores(spark, sf_dir)
-    d = Catalog(spark, sf_dir).table("documents")
-    qual = d.select(
-        "doc_id",
-        F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-        .alias("quality"))
-    binned = cls.join(qual, "doc_id").select(
+    binned = _scored_quality(spark, sf_dir).select(
         F.least(F.lit(99), F.floor(F.col("prob") * 100).cast("int"))
         .alias("bin"), "prob", "quality")
     return (binned.groupBy("bin")
@@ -427,6 +456,27 @@ def _pca_oracle(n_iter: int) -> str:
     return "".join(parts)
 
 
+def _pca_power(spark: SparkSession,
+               sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(full covariance (i, j, c), top-eigenvector estimate (dim, val))
+    after N_POWER normalized matvecs from e_0, both rounded at COV_DP."""
+    upper = _gram_moments(spark, sf_dir).select(
+        "i", "j", F.round(_covariance(), COV_DP).alias("c"))
+    full = upper.union(
+        upper.where(F.col("i") < F.col("j"))
+        .select(F.col("j").alias("i"), F.col("i").alias("j"), F.col("c")))
+    v = local_df(spark, [(0, 1.0)], "dim int, val double")
+    for _ in range(N_POWER):
+        w = (full.join(F.broadcast(v), full.j == v.dim)
+             .groupBy(F.col("i").alias("dim"))
+             .agg(F.sum(F.col("c") * F.col("val")).alias("w")))
+        nrm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("n"))
+        v = (w.crossJoin(F.broadcast(nrm))
+             .select("dim", F.round(F.col("w") / F.col("n"), COV_DP)
+                     .alias("val")))
+    return full, v
+
+
 @register(
     "q_embed_pca_power",
     oracle=_pca_oracle(N_POWER),
@@ -444,27 +494,7 @@ def _pca_oracle(n_iter: int) -> str:
         "d^2-sized state only.",
 )
 def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select(F.col("embedding").alias("v")))
-    partials = e.mapInPandas(_gram_partials, schema=_MOMENT_SCHEMA)
-    cov = (F.col("sxy") / F.col("n")
-           - (F.col("si") / F.col("n")) * (F.col("sj") / F.col("n")))
-    upper = (partials.groupBy("i", "j")
-             .agg(F.sum("n").alias("n"), F.sum("sxy").alias("sxy"),
-                  F.sum("si").alias("si"), F.sum("sj").alias("sj"))
-             .select("i", "j", F.round(cov, COV_DP).alias("c")))
-    full = upper.union(
-        upper.where(F.col("i") < F.col("j"))
-        .select(F.col("j").alias("i"), F.col("i").alias("j"), F.col("c")))
-    v = local_df(spark, [(0, 1.0)], "dim int, val double")
-    for _ in range(N_POWER):
-        w = (full.join(F.broadcast(v), full.j == v.dim)
-             .groupBy(F.col("i").alias("dim"))
-             .agg(F.sum(F.col("c") * F.col("val")).alias("w")))
-        nrm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("n"))
-        v = (w.crossJoin(F.broadcast(nrm))
-             .select("dim", F.round(F.col("w") / F.col("n"), COV_DP)
-                     .alias("val")))
+    _, v = _pca_power(spark, sf_dir)
     return v.select(F.col("dim").cast("int").alias("dim"),
                     (F.round("val", 4) + F.lit(0.0)).alias("component"))
 
@@ -763,22 +793,7 @@ def q_embed_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.transform(F.slice("embedding", s * dim + 1, dim),
                         lambda x: x.cast("double")).alias("v"))
-        cents = (e.where(F.col("vec_id") < PQ_K)
-                 .select(F.col("vec_id").cast("int").alias("cluster"),
-                         F.col("v").alias("cvec")))
-        for _ in range(PQ_ITERS):
-            assigned = _assign(e, cents)
-            upd = (assigned
-                   .select("cluster", F.posexplode("v").alias("dim", "x"))
-                   .groupBy("cluster", "dim")
-                   .agg(F.round(F.avg("x"), CENT_DP).alias("av"))
-                   .groupBy("cluster")
-                   .agg(F.transform(
-                       F.array_sort(F.collect_list(F.struct("dim", "av"))),
-                       lambda st: st.av).alias("ucvec")))
-            cents = (cents.join(upd, "cluster", "left")
-                     .select("cluster",
-                             F.coalesce("ucvec", "cvec").alias("cvec")))
+        cents = _lloyd(e, PQ_K, PQ_ITERS)
         fin = (_assign(e, cents)
                .groupBy("cluster")
                .agg(F.count(F.lit(1)).alias("n_vecs"),
@@ -871,22 +886,7 @@ def q_embed_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.transform(F.slice("embedding", s * dim + 1, dim),
                         lambda x: x.cast("double")).alias("v"))
-        cents = (e.where(F.col("vec_id") < PQ_K)
-                 .select(F.col("vec_id").cast("int").alias("cluster"),
-                         F.col("v").alias("cvec")))
-        for _ in range(PQ_ITERS):
-            assigned = _assign(e, cents)
-            upd = (assigned
-                   .select("cluster", F.posexplode("v").alias("dim", "x"))
-                   .groupBy("cluster", "dim")
-                   .agg(F.round(F.avg("x"), CENT_DP).alias("av"))
-                   .groupBy("cluster")
-                   .agg(F.transform(
-                       F.array_sort(F.collect_list(F.struct("dim", "av"))),
-                       lambda st: st.av).alias("ucvec")))
-            cents = (cents.join(upd, "cluster", "left")
-                     .select("cluster",
-                             F.coalesce("ucvec", "cvec").alias("cvec")))
+        cents = _lloyd(e, PQ_K, PQ_ITERS)
         code_s = (_assign(e, cents)
                   .select("vec_id", F.lit(s).alias("s"), "cluster"))
         sq = F.aggregate(
@@ -1040,27 +1040,7 @@ def q_dedup_semantic_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_embed_pca_explained_variance(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select(F.col("embedding").alias("v")))
-    partials = e.mapInPandas(_gram_partials, schema=_MOMENT_SCHEMA)
-    cov = (F.col("sxy") / F.col("n")
-           - (F.col("si") / F.col("n")) * (F.col("sj") / F.col("n")))
-    upper = (partials.groupBy("i", "j")
-             .agg(F.sum("n").alias("n"), F.sum("sxy").alias("sxy"),
-                  F.sum("si").alias("si"), F.sum("sj").alias("sj"))
-             .select("i", "j", F.round(cov, COV_DP).alias("c")))
-    full = upper.union(
-        upper.where(F.col("i") < F.col("j"))
-        .select(F.col("j").alias("i"), F.col("i").alias("j"), F.col("c")))
-    v = local_df(spark, [(0, 1.0)], "dim int, val double")
-    for _ in range(N_POWER):
-        w = (full.join(F.broadcast(v), full.j == v.dim)
-             .groupBy(F.col("i").alias("dim"))
-             .agg(F.sum(F.col("c") * F.col("val")).alias("w")))
-        nrm = w.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("n"))
-        v = (w.crossJoin(F.broadcast(nrm))
-             .select("dim", F.round(F.col("w") / F.col("n"), COV_DP)
-                     .alias("val")))
+    full, v = _pca_power(spark, sf_dir)
     va = v.select(F.col("dim").alias("ia"), F.col("val").alias("xa"))
     vb = v.select(F.col("dim").alias("ib"), F.col("val").alias("xb"))
     lam = (full.join(F.broadcast(va), full.i == F.col("ia"))
@@ -1124,12 +1104,9 @@ def histogram_auc(j: DataFrame) -> DataFrame:
          + F.lit(0.0)).alias("auc"))
 
 
-@register(
-    "q_classifier_auc",
-    oracle=None,  # replaced below — needs _stop_sql from queries.text
-    doc="",
-)
-def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _scored_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, prob, label): the classifier's score beside the label the
+    classifier evals score it against (stopword ratio >= 0.08)."""
     from datalake_project_spark.functions import text as T
 
     scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
@@ -1137,7 +1114,16 @@ def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = d.select(
         "doc_id",
         (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    return histogram_auc(scores.join(lab, "doc_id"))
+    return scores.join(lab, "doc_id")
+
+
+@register(
+    "q_classifier_auc",
+    oracle=None,  # replaced below — needs _stop_sql from queries.text
+    doc="",
+)
+def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return histogram_auc(_scored_labels(spark, sf_dir))
 
 
 def _install_auc_oracle() -> None:
@@ -1196,14 +1182,7 @@ _install_auc_oracle()
 def q_classifier_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    j = scores.join(lab, "doc_id")
+    j = _scored_labels(spark, sf_dir)
     hist = (j.groupBy("prob")
             .agg(F.count(F.lit(1)).alias("cnt"),
                  F.count(F.when(F.col("label"), 1)).alias("pos")))
@@ -1618,15 +1597,7 @@ _QUAL_SQL = """
         "value-checked exactly.",
 )
 def q_classifier_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    cls = _classifier_scores(spark, sf_dir)
-    d = Catalog(spark, sf_dir).table("documents")
-    qual = d.select(
-        "doc_id",
-        F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-        .alias("quality"))
-    pts = (cls.join(qual, "doc_id")
+    pts = (_scored_quality(spark, sf_dir)
            .select("doc_id",
                    (F.round(F.lit(1.0) - F.col("prob"), 4) + F.lit(0.0))
                    .alias("s"),
@@ -1767,14 +1738,7 @@ def q_recs_als_halfstep(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="",
 )
 def q_classifier_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    j = scores.join(lab, "doc_id").select(
+    j = _scored_labels(spark, sf_dir).select(
         (F.col("prob") >= 0.5).alias("pred"), "label")
     m = j.agg(
         F.sum(F.when(F.col("pred") & F.col("label"), 1).otherwise(0))
@@ -1862,14 +1826,7 @@ _install_mcc_oracle()
 def q_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    j = scores.join(lab, "doc_id")
+    j = _scored_labels(spark, sf_dir)
     hist = (j.groupBy("prob")
             .agg(F.count(F.when(F.col("label"), 1)).alias("pos"),
                  F.count(F.when(~F.col("label"), 1)).alias("neg")))
@@ -2010,6 +1967,21 @@ def q_embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cohen's kappa — chance-corrected agreement between two cheap labelers
 # --------------------------------------------------------------------------
 
+def _rater_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, r1, r2): the classifier's keep call (prob >= 0.5) and the
+    heuristic quality call (score >= 0.5) on each document."""
+    from datalake_project_spark.functions import text as T
+
+    d = Catalog(spark, sf_dir).table("documents")
+    cls = _classifier_scores(spark, sf_dir).select(
+        "doc_id", (F.col("prob") >= 0.5).alias("r1"))
+    qual = d.select(
+        "doc_id",
+        (F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
+         >= 0.5).alias("r2"))
+    return cls.join(qual, "doc_id")
+
+
 @register(
     "q_stats_cohens_kappa",
     oracle=f"""
@@ -2054,16 +2026,7 @@ def q_embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         "enough to substitute one labeler for the other.",
 )
 def q_stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    cls = _classifier_scores(spark, sf_dir).select(
-        "doc_id", (F.col("prob") >= 0.5).alias("r1"))
-    qual = d.select(
-        "doc_id",
-        (F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-         >= 0.5).alias("r2"))
-    m = (cls.join(qual, "doc_id")
+    m = (_rater_pair(spark, sf_dir)
          .agg(F.count(F.lit(1)).alias("n"),
               F.sum(F.when(F.col("r1") & F.col("r2"), 1).otherwise(0))
                .alias("a"),
@@ -2127,16 +2090,7 @@ def q_stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "degenerate b+c = 0 yields NULL identically on both engines.",
 )
 def q_stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    cls = _classifier_scores(spark, sf_dir).select(
-        "doc_id", (F.col("prob") >= 0.5).alias("r1"))
-    qual = d.select(
-        "doc_id",
-        (F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-         >= 0.5).alias("r2"))
-    m = (cls.join(qual, "doc_id")
+    m = (_rater_pair(spark, sf_dir)
          .agg(F.sum(F.when(F.col("r1") & ~F.col("r2"), 1).otherwise(0))
               .alias("b"),
               F.sum(F.when(~F.col("r1") & F.col("r2"), 1).otherwise(0))
@@ -2163,14 +2117,7 @@ def q_stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="",
 )
 def q_classifier_f1_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    scores = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    d = Catalog(spark, sf_dir).table("documents")
-    lab = d.select(
-        "doc_id",
-        (T.stopword_ratio(T.tokens("text"), "en") >= 0.08).alias("label"))
-    hist = (scores.join(lab, "doc_id")
+    hist = (_scored_labels(spark, sf_dir)
             .groupBy("prob")
             .agg(F.count(F.when(F.col("label"), 1)).alias("pos"),
                  F.count(F.when(~F.col("label"), 1)).alias("neg"))
@@ -2267,17 +2214,9 @@ _install_f1_sweep_oracle()
     doc="",
 )
 def q_stats_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions import text as T
-
-    d = Catalog(spark, sf_dir).table("documents")
-    cls = _classifier_scores(spark, sf_dir).select("doc_id", "prob")
-    qual = d.select(
-        "doc_id",
-        F.round(T.quality_score(F.col("text"), T.tokens("text")), 4)
-         .alias("quality"))
     # 4-dp scores scale to exact integer ten-thousandths: every sum
     # below is BIGINT-exact and summation-order-free.
-    j = (cls.join(qual, "doc_id")
+    j = (_scored_quality(spark, sf_dir)
          .select((F.round(F.col("prob") * 10000)
                   - F.round(F.col("quality") * 10000))
                  .cast("long").alias("dd")))

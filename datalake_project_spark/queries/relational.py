@@ -639,21 +639,19 @@ def q_sql_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = o.select(
         F.when(F.col("o_orderkey") % 1000 == 0, F.lit(None))
         .otherwise(F.col("o_custkey")).alias("pk"))
-    probe.createOrReplaceTempView("_notin_probe")
-    c.createOrReplaceTempView("_notin_customer")
     return spark.sql("""
         WITH nulled AS (
-            SELECT COUNT(*) AS n FROM _notin_customer
-            WHERE c_custkey NOT IN (SELECT pk FROM _notin_probe)),
+            SELECT COUNT(*) AS n FROM {customer}
+            WHERE c_custkey NOT IN (SELECT pk FROM {probe})),
         cleaned AS (
-            SELECT COUNT(*) AS n FROM _notin_customer
-            WHERE c_custkey NOT IN (SELECT pk FROM _notin_probe
+            SELECT COUNT(*) AS n FROM {customer}
+            WHERE c_custkey NOT IN (SELECT pk FROM {probe}
                                     WHERE pk IS NOT NULL)),
         anti_cnt AS (
-            SELECT COUNT(*) AS n FROM _notin_customer c
-            WHERE NOT EXISTS (SELECT 1 FROM _notin_probe p
+            SELECT COUNT(*) AS n FROM {customer} c
+            WHERE NOT EXISTS (SELECT 1 FROM {probe} p
                               WHERE p.pk = c.c_custkey))
         SELECT (SELECT n FROM nulled)  AS n_not_in_with_nulls,
                (SELECT n FROM cleaned) AS n_not_in_cleaned,
                (SELECT n FROM anti_cnt)    AS n_not_exists
-    """)
+    """, customer=c, probe=probe)

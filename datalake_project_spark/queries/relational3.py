@@ -526,16 +526,15 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_window_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = Catalog(spark, sf_dir).table("orders").where(F.col("o_custkey") % 100 == 0)
-    o.createOrReplaceTempView("_ivl_orders")
     return spark.sql("""
         SELECT o_orderkey, o_custkey,
                CAST(COUNT(*) OVER w AS BIGINT) AS n_trailing_30d,
                ROUND(SUM(o_totalprice) OVER w, 2) AS spend_trailing_30d
-        FROM _ivl_orders
+        FROM {orders}
         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
                      RANGE BETWEEN INTERVAL 30 DAYS PRECEDING
                                AND CURRENT ROW)
-    """)
+    """, orders=o)
 
 
 @register(

@@ -261,18 +261,16 @@ def _partitioned_orders_for(spark: SparkSession, sf_dir: str) -> str:
 )
 def q_join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _partitioned_orders_for(spark, sf_dir)
-    spark.read.parquet(path).createOrReplaceTempView("_dpp_fact")
-    (Catalog(spark, sf_dir).table("orders")
-     .select(F.year("o_orderdate").alias("o_year"))
-     .distinct().createOrReplaceTempView("_dpp_years"))
+    years = (Catalog(spark, sf_dir).table("orders")
+             .select(F.year("o_orderdate").alias("o_year")).distinct())
     return spark.sql("""
         SELECT f.o_year,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
                ROUND(SUM(f.o_totalprice), 2) AS revenue
-        FROM _dpp_fact f
-        JOIN (SELECT o_year FROM _dpp_years
-              WHERE o_year >= (SELECT MAX(o_year) - 1 FROM _dpp_years)) t
+        FROM {fact} f
+        JOIN (SELECT o_year FROM {years}
+              WHERE o_year >= (SELECT MAX(o_year) - 1 FROM {years})) t
           ON f.o_year = t.o_year
         GROUP BY f.o_year
-    """).select(F.col("o_year").cast("int").alias("o_year"),
+    """, fact=spark.read.parquet(path), years=years).select(F.col("o_year").cast("int").alias("o_year"),
                 "n_orders", "revenue")

@@ -63,6 +63,45 @@ _BM25_CTE = f"""
         GROUP BY tf.doc_id)"""
 
 
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, toks, dl): each document's tokens and their count."""
+    d = Catalog(spark, sf_dir).table("documents")
+    tok = d.select("doc_id", T.tokens("text").alias("toks"))
+    tok = tok.select("doc_id", "toks", F.size("toks").alias("dl"))
+    return tok
+
+
+def _probe_tf(tok: DataFrame) -> DataFrame:
+    """(doc_id, term, tf, dl): frequency of each probe term per document
+    of ``tok`` (the probe-filtered inverted index)."""
+    return (tok.select("doc_id", "dl", F.explode("toks").alias("term"))
+            .where(F.col("term").isin(*PROBE_TERMS))
+            .groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("tf"), F.any_value("dl").alias("dl")))
+
+
+def _bm25_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(term, doc_id, tf, dl, df, n_docs, avgdl): the probe-term index
+    beside each term's document frequency and the corpus statistics
+    that ``_bm25_contribution`` reads."""
+    tok = _doc_tokens(spark, sf_dir)
+    stats = tok.agg(F.count(F.lit(1)).alias("n_docs"),
+                    F.avg("dl").cast("double").alias("avgdl"))
+    tf = _probe_tf(tok)
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return (tf.join(F.broadcast(dfreq), "term")
+            .crossJoin(F.broadcast(stats)))
+
+
+def _bm25_contribution():
+    """One (doc, term) row's BM25 contribution over _bm25_terms' columns."""
+    idf = F.log((F.col("n_docs") - F.col("df") + 0.5)
+                / (F.col("df") + 0.5) + 1.0)
+    norm = (F.col("tf") + K1 * ((1.0 - B)
+                                + B * F.col("dl") / F.col("avgdl")))
+    return idf * F.col("tf") * (K1 + 1.0) / norm
+
+
 def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, score): BM25 over the probe terms, rounded at 4 dp.
 
@@ -70,23 +109,8 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index never touches the rest — at 100 TB the isin filter
     on the exploded term column is the pushed-down probe).
     """
-    d = Catalog(spark, sf_dir).table("documents")
-    tok = d.select("doc_id", T.tokens("text").alias("toks"))
-    tok = tok.select("doc_id", "toks", F.size("toks").alias("dl"))
-    stats = tok.agg(F.count(F.lit(1)).alias("n_docs"),
-                    F.avg("dl").cast("double").alias("avgdl"))
-    tf = (tok.select("doc_id", "dl", F.explode("toks").alias("term"))
-          .where(F.col("term").isin(*PROBE_TERMS))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"), F.any_value("dl").alias("dl")))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1.0)
-    norm = (F.col("tf") + K1 * ((1.0 - B)
-                                + B * F.col("dl") / F.col("avgdl")))
-    return (tf.join(F.broadcast(dfreq), "term")
-            .crossJoin(F.broadcast(stats))
-            .withColumn("_c", idf * F.col("tf") * (K1 + 1.0) / norm)
+    return (_bm25_terms(spark, sf_dir)
+            .withColumn("_c", _bm25_contribution())
             .groupBy("doc_id")
             .agg((F.round(F.sum("_c"), 4) + F.lit(0.0)).alias("score")))
 
@@ -133,6 +157,23 @@ def _candidate_ranks(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
             .agg((F.count(F.col("b.doc_id")) + 1).alias(rank_col)))
 
 
+def _probe_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cos): cosine of every other embedding to vector 0, the
+    vector-side probe of the hybrid rankers, rounded at 6 dp."""
+    e = (Catalog(spark, sf_dir).table("embeddings")
+         .select("vec_id", F.transform(
+             "embedding", lambda x: x.cast("double")).alias("v")))
+    probe = e.where(F.col("vec_id") == 0).select(F.col("v").alias("pv"))
+    dot = F.aggregate(F.zip_with("v", "pv", lambda a, b: a * b),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
+        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    return (e.where(F.col("vec_id") != 0)
+           .crossJoin(F.broadcast(probe))
+           .select(F.col("vec_id").alias("doc_id"),
+                   F.round(dot / (nrm("v") * nrm("pv")), 6).alias("cos")))
+
+
 @register(
     "q_hybrid_retrieval_rrf",
     oracle=f"""
@@ -172,20 +213,7 @@ def _candidate_ranks(df: DataFrame, score_col: str, rank_col: str) -> DataFrame:
 )
 def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     kw = _candidate_ranks(_bm25_scores(spark, sf_dir), "score", "k_rank")
-
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select("vec_id", F.transform(
-             "embedding", lambda x: x.cast("double")).alias("v")))
-    probe = e.where(F.col("vec_id") == 0).select(F.col("v").alias("pv"))
-    dot = F.aggregate(F.zip_with("v", "pv", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    cos = (e.where(F.col("vec_id") != 0)
-           .crossJoin(F.broadcast(probe))
-           .select(F.col("vec_id").alias("doc_id"),
-                   F.round(dot / (nrm("v") * nrm("pv")), 6).alias("cos")))
-    vec = _candidate_ranks(cos, "cos", "v_rank")
+    vec = _candidate_ranks(_probe_cosines(spark, sf_dir), "cos", "v_rank")
 
     fused = (kw.join(vec, "doc_id", "full_outer")
              .select("doc_id",
@@ -591,25 +619,8 @@ def q_search_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = Catalog(spark, sf_dir).table("documents")
-    tok = d.select("doc_id", T.tokens("text").alias("toks"))
-    tok = tok.select("doc_id", "toks", F.size("toks").alias("dl"))
-    stats = tok.agg(F.count(F.lit(1)).alias("n_docs"),
-                    F.avg("dl").cast("double").alias("avgdl"))
-    tf = (tok.select("doc_id", "dl", F.explode("toks").alias("term"))
-          .where(F.col("term").isin(*PROBE_TERMS))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"),
-               F.any_value("dl").alias("dl")))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1.0)
-    norm = (F.col("tf") + K1 * ((1.0 - B)
-                                + B * F.col("dl") / F.col("avgdl")))
-    pt = (tf.join(F.broadcast(dfreq), "term")
-          .crossJoin(F.broadcast(stats))
-          .withColumn("s", F.round(idf * F.col("tf") * (K1 + 1.0)
-                                   / norm, 4) + F.lit(0.0)))
+    pt = (_bm25_terms(spark, sf_dir)
+          .withColumn("s", F.round(_bm25_contribution(), 4) + F.lit(0.0)))
     w = Window.partitionBy("term").orderBy(F.desc("s"), "doc_id")
     fr = (pt.withColumn("rnk", F.row_number().over(w))
           .where(F.col("tf") >= 3)
@@ -683,20 +694,7 @@ RBO_DEPTH = 10
 def q_retrieval_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     kw = (_candidate_ranks(_bm25_scores(spark, sf_dir), "score", "k_rank")
           .where(F.col("k_rank") <= RBO_DEPTH))
-
-    e = (Catalog(spark, sf_dir).table("embeddings")
-         .select("vec_id", F.transform(
-             "embedding", lambda x: x.cast("double")).alias("v")))
-    probe = e.where(F.col("vec_id") == 0).select(F.col("v").alias("pv"))
-    dot = F.aggregate(F.zip_with("v", "pv", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    cos = (e.where(F.col("vec_id") != 0)
-           .crossJoin(F.broadcast(probe))
-           .select(F.col("vec_id").alias("doc_id"),
-                   F.round(dot / (nrm("v") * nrm("pv")), 6).alias("cos")))
-    vec = (_candidate_ranks(cos, "cos", "v_rank")
+    vec = (_candidate_ranks(_probe_cosines(spark, sf_dir), "cos", "v_rank")
            .where(F.col("v_rank") <= RBO_DEPTH))
 
     both = (kw.join(vec, "doc_id")
@@ -823,19 +821,13 @@ MU = 2000.0  # Dirichlet prior mass (Zhai & Lafferty 2001's default range)
 )
 def q_retrieval_query_likelihood(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    d = Catalog(spark, sf_dir).table("documents")
-    tok = d.select("doc_id", T.tokens("text").alias("toks"))
-    tok = tok.select("doc_id", "toks", F.size("toks").alias("dl"))
+    tok = _doc_tokens(spark, sf_dir)
     tot = tok.agg(F.sum("dl").cast("double").alias("ctoks"))
     terms = (tok.select(F.explode("toks").alias("term"))
              .where(F.col("term").isin(*PROBE_TERMS)))
     cf = terms.groupBy("term").agg(F.count(F.lit(1)).cast("double")
                                    .alias("cf"))
-    tf = (tok.select("doc_id", "dl", F.explode("toks").alias("term"))
-          .where(F.col("term").isin(*PROBE_TERMS))
-          .groupBy("doc_id", "term")
-          .agg(F.count(F.lit(1)).alias("tf"),
-               F.any_value("dl").alias("dl")))
+    tf = _probe_tf(tok)
     cand = tf.groupBy("doc_id").agg(F.any_value("dl").alias("dl"))
     grid = cand.crossJoin(F.broadcast(cf))  # bounded x|Q| fanout
     term_s = F.log((F.coalesce(F.col("tf"), F.lit(0)).cast("double")

@@ -745,6 +745,28 @@ _PORTABLE_CTES = """
 """
 
 
+def _exact_top5(e: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos_sim): candidate ``pairs`` re-scored
+    by exact cosine over ``e``'s embeddings, the top 5 per query (ties to
+    the lower neighbor id)."""
+    from pyspark.sql.window import Window
+
+    from datalake_project_spark.functions.vectors import cosine
+
+    qv = e.select(F.col("vec_id").alias("query_id"),
+                  F.col("embedding").alias("_qv"))
+    cv = e.select(F.col("vec_id").alias("neighbor_id"),
+                  F.col("embedding").alias("_cv"))
+    scored = (pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
+              .withColumn("cs", cosine(F.col("_qv"), F.col("_cv"))))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cs"),
+                                               F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= 5)
+            .select("query_id", "neighbor_id", "rank",
+                    F.round("cs", 6).alias("cos_sim")))
+
+
 @register(
     "q_ann_lsh_portable",
     oracle="""
@@ -783,8 +805,6 @@ _PORTABLE_CTES = """
         "O(collisions) scale path as the production operator.",
 )
 def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     e = Catalog(spark, sf_dir).table("embeddings")
     codes = _portable_band_codes(
         spark, _portable_bits(spark, e)).localCheckpoint(eager=False)
@@ -794,19 +814,7 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (qc.join(cc, ["band", "code"])
              .where(F.col("query_id") != F.col("neighbor_id"))
              .select("query_id", "neighbor_id").distinct())
-    from datalake_project_spark.functions.vectors import cosine
-    qv = e.select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("_qv"))
-    cv = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("_cv"))
-    scored = (pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-              .withColumn("cs", cosine(F.col("_qv"), F.col("_cv"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cs"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cs", 6).alias("cos_sim")))
+    return _exact_top5(e, pairs)
 
 
 @register(
@@ -885,19 +893,7 @@ def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (probe.join(cells, "cell")
              .where(F.col("vec_id") != F.col("query_id"))
              .select("query_id", F.col("vec_id").alias("neighbor_id")))
-    from datalake_project_spark.functions.vectors import cosine
-    qv = e.select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("_qv"))
-    cv = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("_cv"))
-    scored = (pairs.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-              .withColumn("cs", cosine(F.col("_qv"), F.col("_cv"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cs"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cs", 6).alias("cos_sim")))
+    return _exact_top5(e, pairs)
 
 
 @register(

@@ -297,6 +297,19 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _probe_shingles(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sh, probe): each document's token 3-shingle array ``_sh`` (empty
+    ones dropped) and the distinct shingles ``_s`` of the probe set,
+    documents 0-2."""
+    from datalake_project_spark.functions.text import shingles
+
+    sh = d.select("doc_id", shingles(T.tokens("text"), n=3).alias("_sh")) \
+        .where(F.size("_sh") >= 1)
+    probe = (sh.where(F.col("doc_id") < 3)
+             .select(F.explode("_sh").alias("_s")).distinct())
+    return sh, probe
+
+
 @register(
     "q_text_contamination",
     oracle="""
@@ -326,13 +339,8 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inverted index the dedup family already builds.",
 )
 def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions.text import shingles
-
     d = Catalog(spark, sf_dir).table("documents")
-    sh = d.select("doc_id", shingles(T.tokens("text"), n=3).alias("_sh")) \
-        .where(F.size("_sh") >= 1)
-    probe = (sh.where(F.col("doc_id") < 3)
-             .select(F.explode("_sh").alias("_s")).distinct())
+    sh, probe = _probe_shingles(d)
     corpus = (sh.where(F.col("doc_id") >= 3)
               .select("doc_id", F.explode("_sh").alias("_s")))
     return (corpus.join(F.broadcast(probe), "_s", "left_semi")
@@ -670,13 +678,8 @@ def q_text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scan plus one keyed aggregate, no extra corpus pass.",
 )
 def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datalake_project_spark.functions.text import shingles
-
     d = Catalog(spark, sf_dir).table("documents")
-    sh = d.select("doc_id", shingles(T.tokens("text"), n=3).alias("_sh")) \
-        .where(F.size("_sh") >= 1)
-    probe = (sh.where(F.col("doc_id") < 3)
-             .select(F.explode("_sh").alias("_s")).distinct())
+    sh, probe = _probe_shingles(d)
     ov = (sh.where(F.col("doc_id") >= 3)
           .select("doc_id", F.explode("_sh").alias("_s"))
           .join(F.broadcast(probe), "_s", "left_semi")
@@ -913,6 +916,18 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Chao1 vocabulary-richness estimate — how many words we HAVEN'T seen
 # --------------------------------------------------------------------------
 
+def _trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(term, c): corpus frequency of every token trigram."""
+    d = Catalog(spark, sf_dir).table("documents")
+    tri = (d.select(T.tokens("text").alias("ws"))
+           .where(F.size("ws") >= 3)
+           .select(F.explode(F.expr(
+               "transform(sequence(0, size(ws) - 3), "
+               "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
+               .alias("term")))
+    return tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+
+
 @register(
     "q_text_chao1_vocab",
     oracle="""
@@ -961,14 +976,7 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "not O(corpus).",
 )
 def q_text_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = Catalog(spark, sf_dir).table("documents")
-    tri = (d.select(T.tokens("text").alias("ws"))
-           .where(F.size("ws") >= 3)
-           .select(F.explode(F.expr(
-               "transform(sequence(0, size(ws) - 3), "
-               "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-               .alias("term")))
-    tf = tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+    tf = _trigram_counts(spark, sf_dir)
     s = tf.agg(
         F.count(F.lit(1)).alias("v"),
         F.sum("c").alias("n_tokens"),
@@ -1032,14 +1040,7 @@ def q_text_chao1_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         "end-to-end with one rounded division per row.",
 )
 def q_text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = Catalog(spark, sf_dir).table("documents")
-    tri = (d.select(T.tokens("text").alias("ws"))
-           .where(F.size("ws") >= 3)
-           .select(F.explode(F.expr(
-               "transform(sequence(0, size(ws) - 3), "
-               "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2]))"))
-               .alias("term")))
-    tf = tri.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
+    tf = _trigram_counts(spark, sf_dir)
     coc = (tf.groupBy(F.col("c").alias("r"))
            .agg(F.count(F.lit(1)).alias("nr"))
            .localCheckpoint(eager=False))

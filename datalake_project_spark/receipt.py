@@ -107,6 +107,18 @@ def record(names: list[str], sf_dir: str, trials: int = 1) -> list[dict]:
     return [{**log.receipt(run), **session} for run in runs]
 
 
+def _stage_name(si: dict) -> str:
+    """The stage's distinct RDD scope names (the plan operators, e.g.
+    ``Scan parquet, WholeStageCodegen (1), Exchange``) in RDD order;
+    Spark's call-site ``Stage Name``, which under AQE mostly reads
+    ``$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java``,
+    only when no RDD carries a scope."""
+    rdds = sorted(si.get("RDD Info", []), key=lambda r: r["RDD ID"])
+    scopes = [json.loads(r["Scope"])["name"].strip()
+              for r in rdds if r.get("Scope")]
+    return ", ".join(dict.fromkeys(scopes)) or si["Stage Name"]
+
+
 class _EventLog:
     """The parts of one application's event log that receipts read."""
 
@@ -132,7 +144,7 @@ class _EventLog:
         elif ev == "SparkListenerStageCompleted":
             si = e["Stage Info"]
             self._stage(si["Stage ID"]).update(
-                name=si["Stage Name"], sub=si["Submission Time"],
+                name=_stage_name(si), sub=si["Submission Time"],
                 wall_s=(si["Completion Time"] - si["Submission Time"]) / 1e3)
         elif ev == "SparkListenerTaskEnd":
             self._task(e)

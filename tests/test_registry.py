@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from datalake_project_spark.queries import load_all
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -129,3 +131,21 @@ def test_sql_entrypoint_equals_dataframe_query(spark):
     via_df = (load_all()["q1_pricing_summary"].fn(spark, SF_SMOKE)
               .select("l_returnflag", "l_linestatus", "count_order"))
     assert rows(via_sql) == rows(via_df)
+
+
+@pytest.mark.parametrize("name", ["q_sql_not_in_null_semantics",
+                                  "q_window_interval_frame",
+                                  "q_join_dpp_partitioned"])
+def test_sql_query_leaves_temp_views_unchanged(spark, name):
+    """These queries hand their inputs to ``spark.sql`` as DataFrame
+    arguments, so building and collecting one leaves the session's
+    temp views as they were (a named view would outlive the query)."""
+    if not os.path.isdir(SF_SMOKE):
+        pytest.skip("driver testdata not present")
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    load_all()[name].fn(spark, SF_SMOKE).collect()
+    assert temp_views() == before

@@ -15,6 +15,18 @@ for the three scale-killers that can hide behind correct results:
   round-4 judge's dead-detector finding). A regression test in
   tests/test_plans.py pins that a deliberately global window IS flagged.
 
+Every swept query also prints ``PLAN <query> <digest>``: the sha1 of its
+optimized logical plan with expression ids, lambda-variable counters and
+the scratch root normalized, so the output of two sweeps (two checkouts,
+two processes) can be diffed to show that a refactor kept every plan.
+A checkpointed input prints as ``LogicalRDD [cols], false``: the digest
+does not see the plan beneath it. A few plans vary between runs of the
+same code: the distinct-aggregate rewrite (``Expand``) orders its groups
+by expression-id hash, which depends on what the process built before,
+and a ``mergeSchema`` read takes its column order from the files it
+lists. Re-check a differing query alone in a fresh process before
+calling its plan changed.
+
 Exit 1 with the offender list if anything is found. Queries whose
 construction is a driver loop by design (BPE training) or builds scratch
 state (bucketed tables, IVF index) are skipped — their plans are pinned
@@ -25,6 +37,8 @@ Usage: python tools/plan_sweep.py [sf_dir]
 
 from __future__ import annotations
 
+import hashlib
+import re
 import sys
 from pathlib import Path
 
@@ -33,6 +47,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from datalake_project_spark.plans.introspect import (  # noqa: E402
     simple_plan, single_partition_sort_smells)
 from datalake_project_spark.queries import load_all  # noqa: E402
+from datalake_project_spark.scratch import scratch_root  # noqa: E402
 from datalake_project_spark.session import get_spark  # noqa: E402
 
 SKIP = {
@@ -46,6 +61,19 @@ SKIP = {
     "q_ann_ivf_topk", "q_ann_ivf_recall",            # builds IVF index
 }
 
+_EXPR_ID = re.compile(r"#\d+")
+_LAMBDA_VAR = re.compile(r"(lambda \w+?_)\d+")
+
+
+def plan_digest(df) -> str:
+    """sha1 of the optimized logical plan, independent of the process
+    (expression ids, lambda-variable counters) and of the checkout
+    (scratch root)."""
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    text = text.replace(scratch_root(), "<scratch>")
+    text = _LAMBDA_VAR.sub(r"\1", _EXPR_ID.sub("#", text))
+    return hashlib.sha1(text.encode()).hexdigest()
+
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -58,7 +86,9 @@ def main() -> int:
             continue
         n += 1
         try:
-            plan = simple_plan(spec.fn(spark, sf_dir))
+            df = spec.fn(spark, sf_dir)
+            plan = simple_plan(df)
+            print(f"PLAN {name} {plan_digest(df)}", flush=True)
         except Exception as e:  # construction itself must not fail
             offenders.append((name, [f"ERR {type(e).__name__}: {e}"]))
             continue
